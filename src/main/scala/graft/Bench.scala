@@ -1038,7 +1038,8 @@ object Bench {
     // query records -1 and the sweep continues; never fatal to the
     // bench record. Opt-in because the full catalog at 100× costs
     // ~10 min the driver's per-round run should not pay.
-    if (sf01Armed && sys.env.get("SPARK_GRAFT_SF10_SWEEP").contains("1"))
+    if (sf01Armed && sys.env.get("SPARK_GRAFT_SF10_SWEEP").contains("1")) {
+      var sw = spark
       try {
         val sf10Dir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "/tmp/graft-sf10")
         ensureSf10(spark, sfDir, sf10Dir)
@@ -1058,7 +1059,6 @@ object Bench {
         // session-safe (timeOnce clears RunCaches; the feature memo
         // drops stopped sessions' entries).
         val sweepCycle = 20
-        var sw = spark
         val secs = QueryDef.catalogs.zipWithIndex.map { case (q, i) =>
           if (i > 0 && i % sweepCycle == 0) {
             sw.stop()
@@ -1083,12 +1083,16 @@ object Bench {
         java.nio.file.Files.writeString(java.nio.file.Paths.get(out), body)
         System.err.println(s"[bench] sf10 sweep written to $out " +
           s"(${secs.count(_._2 >= 0)} timed, ${failed.size} failed)")
-        // the sweep is the run's last Spark work; nothing below needs a
-        // live context (record lines are pre-rendered strings)
-        sw.stop()
       } catch { case e: Throwable =>
         System.err.println(s"[bench] sf10 sweep skipped: ${e.getMessage}")
+      } finally {
+        // the sweep is the run's last Spark work; nothing below needs a
+        // live context (record lines are pre-rendered strings). `spark`
+        // may already be stopped here (the first cycle stops it); `sw` is
+        // whichever session is live, also when the sweep failed.
+        sw.stop()
       }
+    }
 
     // a -1 (died) query is EXCLUDED from the total's sum, which would
     // otherwise read as a speedup — the `failed` field marks the total

@@ -246,47 +246,25 @@ object Relational {
     * broadcast (measured no faster than SMJ even there, and exactly the
     * plan that falls over at 100×). The hint encodes the intent the
     * estimate noise obscured; at real scale Catalyst would pick SMJ
-    * anyway. The global orderBy is the dominant scale cost by design —
-    * range-partitioning samples its child, so the join is evaluated
-    * twice (measured at sf1: join+materialize ≈ 6 s, +global sort ≈
-    * 30 s) — the price of an oracle-mandated total order on a
-    * fact-sized output. */
+    * anyway. The global orderBy is the dominant scale cost by design
+    * (measured at sf1: join+materialize ≈ 6 s, +global sort ≈ 30 s) —
+    * the price of an oracle-mandated total order on a fact-sized
+    * output. */
   val j1FkJoin = QueryDef(
     "j1_fk_join",
     (s, dir) => {
       val t = T(s, dir)
-      // the oracle mandates a GLOBAL order, and orderBy = range
-      // repartition whose boundary sampler EXECUTES the child once
-      // before the sort job executes it again — the fact-fact join ran
-      // twice per query since r1 (adjudicated every round since r4).
-      // Materializing the join ONCE through the session memo makes the
-      // sampler job the cache fill and the sort job a cache read: the
-      // join's cost is paid once, cold-run timing includes the fill,
-      // and the memo registry reclaims the frame like every dd_*
-      // feature (r17; measured at sf10 before adoption). At 100 TB the
-      // memo level conf (spark.graft.featureMemoLevel) steers the
-      // persist tier or disables it, trading the second evaluation back
-      // for zero storage — the documented relief valve.
-      // versioned on BOTH sources (r17 review 3): the catalog's first
-      // two-source memo — keyed on lineitem alone, an in-place
-      // regeneration of orders.parquet would version-match and serve
-      // the stale pre-regeneration join, the exact hazard srcVersion
-      // exists to prevent. Both mtimes are embedded in the KEY, not
-      // combined into the version Long: max-combining let a
-      // lower-mtime regeneration version-match (r17 advice), the sum
-      // replacement still collided on offsetting forward/backward
-      // movements (second r18 review: backup-restore of one source
-      // next to a regeneration of the other), and a HASH of the pair
-      // would break cachedFeature's ORDERED latest-wins publish (the
-      // r13 xor hazard). A per-pair key is fully injective; the
-      // one-stranded-frame-per-regeneration leak that made r17 reject
-      // key-embedding is closed the way incrcand closed it — evict
-      // this query's sibling entries before building.
-      val vOrders = Similarity.srcVersion(s, dir, "orders.parquet")
-      val vLineitem = Similarity.srcVersion(s, dir, "lineitem.parquet")
+      // orderBy's range partitioner samples its child before the sort
+      // job runs it again: memoizing the join makes the sampler the
+      // cache fill and the sort a cache read, so the join runs once.
+      // Both source mtimes are in the key, not combined into the
+      // version: one combined Long cannot stay both injective and
+      // ordered. Sibling keys of older mtimes are evicted first.
+      val vOrders = RunCaches.srcVersion(s, dir, "orders.parquet")
+      val vLineitem = RunCaches.srcVersion(s, dir, "lineitem.parquet")
       val j1Key = s"j1_joined:$dir:$vOrders:$vLineitem"
-      Similarity.evictFeaturePrefix(s"j1_joined:$dir:", spare = _ == j1Key)
-      val joined = Similarity.cachedFeature(s, j1Key) {
+      RunCaches.evictFeaturePrefix(s"j1_joined:$dir:", spare = _ == j1Key)
+      val joined = RunCaches.cachedFeature(s, j1Key) {
         t.orders.hint("merge")
           .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
           .select(

@@ -24,136 +24,6 @@ object ScaleOps {
 
   private def T(s: SparkSession, dir: String) = Tables(s, dir)
 
-  /** Memoized broadcast Bloom filters keyed per (session, dir): a query
-    * function can run many times in one session (bench passes,
-    * determinism re-runs) and a `SparkContext.broadcast` is pinned on
-    * driver and executors until destroyed — without the memo each run
-    * would leak a fresh copy for the session's lifetime. Same posture as
-    * `Similarity.featCache`: synchronized, stopped-session eviction, and
-    * an explicit clear for harnesses that want cold runs. */
-  private val bloomCache = scala.collection.mutable.HashMap
-    .empty[(SparkSession, String),
-      (Long, org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter])]
-  RunCaches.register("scaleops-bloom-memo")(() => clearBloomCache())
-  RunCaches.register("scaleops-cc-checkpoints")(() => clearCcCheckpoints())
-  RunCaches.register("scaleops-kernel-broadcasts")(() => clearKernelBroadcasts())
-  private def cachedBloom(s: SparkSession, key: String, version: Long)(
-      build: => org.apache.spark.util.sketch.BloomFilter)
-      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter] = {
-    val k = (s, key)
-    // Superseded-logical-key eviction, same key/version split as
-    // Similarity.cachedFeature (the fingerprint is its OWN field, never
-    // recovered from the key string — ADVICE r12): an in-session corpus
-    // rewrite otherwise leaves one dead pinned broadcast per rewrite
-    // until a harness clear. Stale entries are detached under the lock
-    // and reclaimed OUTSIDE it (the reclaim blocks on executor-side
-    // removal — the slow-Spark-op-under-lock class this function
-    // already avoids for builds). Every eviction reclaim is
-    // unpersist(false) + drop, NEVER destroy — a CONCURRENT caller (any
-    // session, including this one: two threads of one session can race
-    // a corpus rewrite) may hold the broadcast mid-query, and destroy()
-    // fails that in-flight job where unpersist only re-ships the value
-    // on next use; the dropped driver reference leaves final reclaim to
-    // the ContextCleaner (r13 diff re-review — the earlier 'own session
-    // may destroy' rationale was false for concurrent threads).
-    val (existing, detached) = bloomCache.synchronized {
-      bloomCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      // same ordering rule as Similarity.cachedFeature's eviction: a
-      // same-session entry yields only to a strictly NEWER caller
-      // fingerprint (a mid-regeneration stale caller must not evict the
-      // fresher filter a concurrent caller already built); other
-      // sessions' entries always yield — one filter per logical key
-      val staleKeys = bloomCache.collect {
-        case ((sess, k2), (ver, _))
-            if k2 == key && (!(sess eq s) || ver < version) => (sess, k2)
-      }.toList
-      // removals STRICTLY BEFORE the hit lookup (tuple elements evaluate
-      // left-to-right, so the lookup must not share the tuple): a
-      // superseded same-(session, key) entry is in staleKeys, and a
-      // lookup taken first would return the very broadcast the caller
-      // then reclaims — a reclaimed, wrong-version filter instead of a
-      // rebuild (r13 re-sweep; the pre-r13 code had this order right)
-      val staleB = staleKeys.flatMap(bloomCache.remove).map(_._2)
-      // hit only on the EXACT requested fingerprint (same rule as
-      // Similarity.cachedFeature): a surviving entry can only be
-      // same-version or strictly newer, and serving the newer filter to
-      // an older-fingerprint caller mixes versions within one query; the
-      // older caller falls through to the build path, which returns its
-      // build un-memoized when a newer entry holds the slot (ADVICE r13)
-      (bloomCache.get(k).collect { case (ver, b) if ver == version => b }, staleB)
-    }
-    detached.foreach(b => scala.util.Try(b.unpersist(false)))
-    existing.getOrElse {
-      // build OUTSIDE the monitor (ADVICE r5): the build runs full Spark
-      // jobs (count + bloomFilter treeAggregate) and holding the global
-      // lock across them would serialize every concurrent query and
-      // clearBloomCache() for the duration. Check-then-publish WITH the
-      // version ORDERED (same rule as Similarity.cachedFeature —
-      // fingerprints are mtimes or the monotonic nanoTime fallback): a
-      // concurrent duplicate build of the SAME version loses the race
-      // and is destroyed; a STRICTLY OLDER stored version (corpus
-      // rewritten mid-flight) is superseded — latest fingerprint wins,
-      // because silently returning the stale filter would under-report
-      // contamination via false negatives (r13 re-sweep). A stale build
-      // that finds a FRESHER entry already published must NOT overwrite
-      // it (the old `case other` branch was last-publisher-wins): it
-      // returns its own filter un-memoized — the caller asked for that
-      // fingerprint — and the unreferenced broadcast is reclaimed by
-      // the ContextCleaner once the caller drops it. Reclaims run
-      // outside the monitor; a superseded entry is unpersist-detached
-      // (a concurrent thread may be mid-query on it — see the eviction
-      // comment), while the same-version race LOSER is destroyed
-      // outright: `fresh` was never published or returned to anyone.
-      val fresh = s.sparkContext.broadcast(build)
-      val outcome = bloomCache.synchronized {
-        bloomCache.get(k) match {
-          case Some((ver, w)) if ver == version => Left(w)
-          case Some((ver, _)) if ver > version => Right(None)
-          case other =>
-            bloomCache.update(k, (version, fresh))
-            Right(other.map(_._2))
-        }
-      }
-      outcome match {
-        case Left(w) => scala.util.Try(fresh.destroy()); w
-        case Right(superseded) =>
-          superseded.foreach(b => scala.util.Try(b.unpersist(false)))
-          fresh
-      }
-    }
-  }
-
-  /** Cheap data fingerprint for Bloom cache keys — delegates to
-    * [[Similarity.srcVersion]], the ONE dir-or-file max-mtime rule
-    * (this was a second inline copy that could drift). Rewriting the
-    * files within one session (driver regenerating test data, a harness
-    * rebuilding a fixture) changes the key and so invalidates the memo —
-    * a stale filter yields false NEGATIVES for new benchmark shingles,
-    * and the exact-confirm join only removes false positives, so
-    * contamination would be silently under-reported (ADVICE r5).
-    * Superseded fingerprints are reclaimed by the caches' own
-    * logical-key eviction. The no-mtime-store fallback (jdbc locator,
-    * vanished path → fresh nanoTime, memoization degrading to
-    * build-per-call) lives INSIDE srcVersion since r13 — no second
-    * Try here, the exact drift this delegate exists to avoid. */
-  private def docsFingerprint(s: SparkSession, dir: String): Long =
-    Similarity.srcVersion(s, dir, "documents.parquet")
-
-  /** Destroys and forgets every memoized Bloom broadcast (Try-wrapped:
-    * one stopped session must not abort clearing the rest). Bench calls
-    * this alongside `Similarity.clearFeatureCache` so timed runs build
-    * the filter cold. */
-  def clearBloomCache(): Unit = {
-    // detach under the lock, destroy outside it (blocking destroys must
-    // not stall concurrent cachedBloom lookups)
-    val detached = bloomCache.synchronized {
-      val vs = bloomCache.values.map(_._2).toList
-      bloomCache.clear()
-      vs
-    }
-    detached.foreach(b => scala.util.Try(b.destroy()))
-  }
-
   /** Generic left as-of join: every `left` row paired with the latest
     * `right` row of the same `key` whose `rightTime <= leftTime` —
     * `right`'s columns come back in a nullable `asof` struct (null when
@@ -365,7 +235,7 @@ object ScaleOps {
         // `next` is materialized (eager checkpoint), so the previous
         // iteration's blocks are dead — free them NOW instead of waiting
         // for driver GC to trigger ContextCleaner (on a big-heap driver
-        // that may be never; same leak class the Bloom memo guards)
+        // that may be never)
         unpersistCheckpoint(labels)
         labels = next
         // reliable mode = the disk-bound posture: nudge the driver GC so
@@ -385,16 +255,13 @@ object ScaleOps {
       // free the last iteration's checkpoint before throwing: the error
       // path must not pin O(V) blocks (and reliable-mode files) forever —
       // a retry loop would otherwise leak one orphaned snapshot per
-      // attempt, the leak class ccCheckpoints exists to prevent
+      // attempt
       scala.util.Try(unpersistCheckpoint(labels))
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter iterations")
     }
-    // the returned frame is itself a checkpoint and would otherwise stay
-    // pinned until driver GC triggers ContextCleaner — register it so
-    // harness resets (Bench / TimeQueries cold runs) free it
-    // deterministically, the same contract as the Bloom memo
-    ccCheckpoints.synchronized { ccCheckpoints += labels }
+    // the returned frame is itself a checkpoint: harness resets free it
+    RunCaches.releaseAtClear(labels)(unpersistCheckpoint(labels))
     labels
   }
 
@@ -508,70 +375,11 @@ object ScaleOps {
     val labels = nodes
       .join(e.select(col("x").as("node"), col("y").as("lbl")), Seq("node"), "left")
       .select(col("node"), coalesce(col("lbl"), col("node")).as("label"))
-    // both surviving checkpoints feed the returned lazy frame — register
-    // them for the deterministic harness reclaim like connectedComponents
-    ccCheckpoints.synchronized { ccCheckpoints += e; ccCheckpoints += nodes }
+    // both surviving checkpoints feed the returned lazy frame
+    RunCaches.releaseAtClear(e)(unpersistCheckpoint(e))
+    RunCaches.releaseAtClear(nodes)(unpersistCheckpoint(nodes))
     labels
   }
-
-  /** Converged label frames returned by [[connectedComponents]] — each is
-    * a checkpoint whose blocks stay pinned until freed. Harnesses call
-    * [[clearCcCheckpoints]] alongside [[clearBloomCache]] before timed or
-    * repeated runs; library callers may call it once their downstream
-    * consumption of a returned components frame is materialized. */
-  private val ccCheckpoints = scala.collection.mutable.ListBuffer.empty[DataFrame]
-
-  /** Frees the storage of every registered converged components frame —
-    * blocks, and for reliable checkpoints the files too (Try-wrapped: a
-    * stopped session must not abort the rest). Only safe once consumers
-    * have materialized; the frames are not recomputable afterwards. */
-  def clearCcCheckpoints(): Unit = {
-    // detach under the lock, reclaim outside it — unpersistCheckpoint
-    // issues filesystem deletes for reliable checkpoints, and a slow
-    // namenode must not block a concurrent connectedComponents at its
-    // registration point (same split as the other two clears)
-    val detached = ccCheckpoints.synchronized {
-      val vs = ccCheckpoints.toList
-      ccCheckpoints.clear()
-      vs
-    }
-    detached.foreach(df => scala.util.Try(unpersistCheckpoint(df)))
-  }
-
-  /** Offsets broadcasts created by [[strataPrefixSum]] — each is
-    * bounded-small (≤ nChunks × |strata| entries) but stays pinned on
-    * the driver and executors until destroyed, and the kernel runs once
-    * per construction (catalog plan sweeps, the 3-pass bench), so
-    * without a registry they accumulate for the session's lifetime
-    * relying on driver GC + ContextCleaner — the same leak class the
-    * Bloom memo and [[ccCheckpoints]] exist to avoid. They cannot be
-    * destroyed eagerly: the returned frame is lazy and reads the
-    * broadcast at every execution. Harness resets free them alongside
-    * the other registries. */
-  private val kernelBroadcasts = scala.collection.mutable.ListBuffer
-    .empty[org.apache.spark.broadcast.Broadcast[_]]
-
-  /** Destroys and forgets every registered kernel broadcast
-    * (Try-wrapped: a stopped session must not abort the rest; destroys
-    * run outside the lock — they block on executor-side removal). Only
-    * safe once every frame returned by [[strataPrefixSum]]/[[strataRank]]
-    * has materialized; Bench/TimeQueries call it between cold runs, the
-    * same contract as [[clearCcCheckpoints]]. */
-  def clearKernelBroadcasts(): Unit = {
-    val detached = kernelBroadcasts.synchronized {
-      val vs = kernelBroadcasts.toList
-      kernelBroadcasts.clear()
-      vs
-    }
-    detached.foreach(b => scala.util.Try(b.destroy()))
-  }
-
-  /** Live registered kernel-broadcast count — the leak-count spec hook
-    * (ScaleOpsSpec asserts the delta across repeated kernel runs is
-    * exactly one registration per construction, reclaimed by the
-    * clear). */
-  private[graft] def kernelBroadcastCount: Int =
-    kernelBroadcasts.synchronized(kernelBroadcasts.size)
 
   /** Frees the storage behind a checkpointed frame. A checkpointed
     * Dataset is not in the CacheManager (`df.unpersist()` is a no-op for
@@ -685,11 +493,9 @@ object ScaleOps {
         }
       }.toMap
     val bc = spark.sparkContext.broadcast(offsets)
-    // registered, not destroyed: the returned frame reads `bc` lazily at
-    // every execution, so the broadcast lives until a harness reset
-    // ([[clearKernelBroadcasts]]) — the deterministic-cleanup posture
-    // every other broadcast/checkpoint in the engine already follows
-    kernelBroadcasts.synchronized { kernelBroadcasts += bc }
+    // the returned frame reads `bc` lazily at every execution, so it
+    // lives until a harness reset
+    RunCaches.releaseAtClear(bc)(bc.destroy())
     val outRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
       var cur: List[Any] = null
       var acc = 0L
@@ -1214,14 +1020,16 @@ object ScaleOps {
       def shOf(df: DataFrame): DataFrame = df
         .select(col("doc_id"), Text.shingles3Once(col("text")).as("sh"))
         .filter(col("sh").isNotNull)
-      val fp = docsFingerprint(s, dir)
+      // versioned on the documents' mtime: a stale filter would
+      // under-report contamination through false negatives
+      val fp = RunCaches.srcVersion(s, dir, "documents.parquet")
       // the distinct benchmark-shingle frame feeds THREE consumers on a
       // cold run — the capacity count, the bloomFilter treeAggregate
       // and the exact-confirm join below — and each would re-run the
       // documents scan + shingle UDF + explode + distinct shuffle; one
       // persisted copy through the shared feature memo (fingerprint-
       // keyed like every entry there) serves all three
-      val bench = Similarity.cachedFeature(s, s"decontam_bench:$dir", fp) {
+      val bench = RunCaches.cachedFeature(s, s"decontam_bench:$dir", fp) {
         shOf(docs.filter(col("source") === "src0"))
           .select(explode(col("sh")).as("shingle")).distinct()
       }
@@ -1229,9 +1037,9 @@ object ScaleOps {
       // driver action on the small stratum, memoized with the filter):
       // a hardcoded capacity silently degrades the 1% fpp — and with it
       // the entire point of the pre-filter — once the stratum outgrows it
-      val bc = cachedBloom(s, s"decontam:$dir", fp) {
+      val bc = RunCaches.cachedBroadcast(s, s"decontam:$dir", fp) {
         val n = math.max(1000L, bench.count())
-        bench.stat.bloomFilter("shingle", n, 0.01)
+        s.sparkContext.broadcast(bench.stat.bloomFilter("shingle", n, 0.01))
       }
       val mightContain = udf((x: String) => x != null && bc.value.mightContain(x))
       val train = shOf(docs.filter(col("source") =!= "src0"))

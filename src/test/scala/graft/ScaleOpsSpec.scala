@@ -316,7 +316,7 @@ class ScaleOpsSpec extends SparkSpec {
         spark.conf.set("spark.graft.ccAlgo", "nope")
         intercept[RuntimeException](g1.run(spark, sf001).collect())
       } finally spark.conf.unset("spark.graft.ccAlgo")
-    } finally ScaleOps.clearCcCheckpoints()
+    } finally graft.operators.RunCaches.clearAll()
   }
 
   test("connectedComponents frees its per-iteration checkpoints") {
@@ -332,9 +332,9 @@ class ScaleOpsSpec extends SparkSpec {
     assert(added.size <= 1, s"expected at most the final labels checkpoint, got ${added.size}")
     // the returned frame is registered: the harness reset frees it too
     // (ADVICE r5: repeated executions each pinned one converged block set)
-    graft.operators.ScaleOps.clearCcCheckpoints()
+    graft.operators.RunCaches.clearAll()
     assert(added.intersect(sc.getPersistentRDDs.keySet).isEmpty,
-      "clearCcCheckpoints left the converged labels pinned")
+      "clearAll left the converged labels pinned")
   }
 
   test("connectedComponents reliable-checkpoint path converges identically") {
@@ -369,7 +369,7 @@ class ScaleOpsSpec extends SparkSpec {
           s"(${liveRddDirs.map(_.getName).sorted.mkString(", ")})")
     } finally {
       spark.conf.unset("spark.graft.checkpointDir")
-      graft.operators.ScaleOps.clearCcCheckpoints()
+      graft.operators.RunCaches.clearAll()
     }
   }
 
@@ -379,8 +379,8 @@ class ScaleOpsSpec extends SparkSpec {
     // the leak-count contract (same as the CC checkpoint registry) is:
     // exactly one registration per construction, all reclaimed by the
     // reset that Bench/TimeQueries run between cold measurements
-    graft.operators.ScaleOps.clearKernelBroadcasts()
-    assert(graft.operators.ScaleOps.kernelBroadcastCount === 0)
+    graft.operators.RunCaches.clearAll()
+    assert(graft.operators.RunCaches.kernelBroadcastCount === 0)
     val df = (1 to 100).map(i => (s"s${i % 3}", i.toLong, i.toLong))
       .toDF("src", "id", "v")
     (1 to 3).foreach { _ =>
@@ -388,11 +388,11 @@ class ScaleOpsSpec extends SparkSpec {
         .strataPrefixSum(df, Seq("src"), Seq("id"), col("v"), "off")
         .collect()
     }
-    assert(graft.operators.ScaleOps.kernelBroadcastCount === 3,
+    assert(graft.operators.RunCaches.kernelBroadcastCount === 3,
       "expected exactly one registered broadcast per kernel construction")
-    graft.operators.ScaleOps.clearKernelBroadcasts()
-    assert(graft.operators.ScaleOps.kernelBroadcastCount === 0,
-      "clearKernelBroadcasts left registrations behind")
+    graft.operators.RunCaches.clearAll()
+    assert(graft.operators.RunCaches.kernelBroadcastCount === 0,
+      "clearAll left kernel broadcasts listed")
   }
 
   test("reserved-name guards reject any-case collisions (withColumn resolves case-insensitively)") {
@@ -448,32 +448,27 @@ class ScaleOpsSpec extends SparkSpec {
     }
   }
 
-  test("RunCaches.clearAll runs every registered clearer, even past a failure") {
+  test("RunCaches.clearAll releases every listed value, even past a failing release") {
     var a = 0
     var b = 0
-    graft.operators.RunCaches.register("spec-a")(() => a += 1)
-    graft.operators.RunCaches.register("spec-boom")(() => sys.error("boom"))
-    graft.operators.RunCaches.register("spec-b")(() => b += 1)
-    try {
-      graft.operators.RunCaches.clearAll()
-      assert(a === 1 && b === 1, "a throwing clearer must not skip the rest")
-    } finally
-      // deregister the planted clearers: the registry is JVM-global, and
-      // the permanently-throwing one would otherwise print its warning
-      // on EVERY later clearAll (each timed bench sample, every suite's
-      // reset) — alarm fatigue over a deliberate fixture
-      Seq("spec-a", "spec-boom", "spec-b")
-        .foreach(graft.operators.RunCaches.unregister)
-    // the real caches register at class load: after touching the kernel
-    // path (tests above), one clearAll must reclaim its broadcasts the
-    // same way the targeted clear does — the harness-reset contract
+    val rc = graft.operators.RunCaches
+    rc.releaseAtClear("spec-a")(a += 1)
+    rc.releaseAtClear("spec-boom")(sys.error("boom"))
+    rc.releaseAtClear("spec-b")(b += 1)
+    rc.clearAll()
+    assert(a === 1 && b === 1, "a throwing release must not skip the rest")
+    // the list is emptied: a later reset neither re-runs nor re-reports
+    rc.clearAll()
+    assert(a === 1 && b === 1, "clearAll left released values listed")
+    // after touching the kernel path, one clearAll reclaims its
+    // broadcasts — the harness-reset contract
     graft.operators.ScaleOps
       .strataPrefixSum(Seq(("s", 1L, 1L)).toDF("src", "id", "v"),
         Seq("src"), Seq("id"), col("v"), "off").collect()
-    assert(graft.operators.ScaleOps.kernelBroadcastCount >= 1)
-    graft.operators.RunCaches.clearAll()
-    assert(graft.operators.ScaleOps.kernelBroadcastCount === 0,
-      "clearAll must reach the kernel-broadcast registry")
+    assert(rc.kernelBroadcastCount >= 1)
+    rc.clearAll()
+    assert(rc.kernelBroadcastCount === 0,
+      "clearAll must reach the kernel broadcasts")
   }
 
   test("dd_minhash_cc: transitive chain collapses to one cluster") {

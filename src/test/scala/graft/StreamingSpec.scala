@@ -1236,7 +1236,8 @@ class StreamingSpec extends SparkSpec {
     * The intra-increment exact-dup (46 of 45) and near-dup (47 of 45)
     * pairs straddle batch boundaries when streamed one doc per
     * micro-batch, so they can ONLY be caught by accumulated state. */
-  private def plantedAdmissionFixture(tag: String)
+  private def plantedAdmissionFixture(tag: String,
+      extra: Seq[(Long, String, String, String)] = Nil)
       : (String, Seq[(Long, String, String, String)], Seq[(Long, String)]) = {
     val tail = "the a of to in is and for"
     val tail2 = "a the of to in is and for"
@@ -1259,7 +1260,8 @@ class StreamingSpec extends SparkSpec {
       doc(46, "src1", "juniper kumquat lavender marigold nasturtium oleander peony quince"), // exact_dup of 45 — CROSS-BATCH via state.fps
       doc(47, "src2", "juniper kumquat lavender marigold nasturtium oleander peony quince", tail2), // near_dup of 45 — CROSS-BATCH via state.bands/toks
       doc(48, "src2", "rosemary saffron tamarind verbena wisteria yarrow zinnia basilisk"), // admitted
-      doc(49, "src1", "asteroid binary comet dwarf exoplanet galaxy heliopause ionosphere")) // admitted
+      doc(49, "src1", "asteroid binary comet dwarf exoplanet galaxy heliopause ionosphere")) ++ // admitted
+      extra
     val dir = tempDir(s"graft-ingadm-$tag").toString
     (base ++ incr).map { case (id, text, lang, src) => (id, text, lang, src, text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -1290,6 +1292,38 @@ class StreamingSpec extends SparkSpec {
     val batch = IngestIncr.batchVerdictsFor(spark, dir, split).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("verdict")).toSeq
     assert(batch === want)
+  }
+
+  test("LIVE ingest admission: one verdict row per doc when an exact dup repeats a near-dup candidate") {
+    import graft.operators.IngestIncr
+    // 50 repeats 47's text: an exact dup of a doc that is itself a
+    // near-dup of 45, so 50 is near-dup-eligible as well. The fused
+    // verdict assembly unions the exact_dup, contaminated and near_dup
+    // sets, so it emits one row per doc only while they stay disjoint.
+    val text47 = "juniper kumquat lavender marigold nasturtium oleander " +
+      "peony quince a the of to in is and for"
+    val (dir, incr, want) = plantedAdmissionFixture("uniq",
+      extra = Seq((50L, text47, "en", "src1")))
+    val (idx, split) = IngestIncr.ensurePipeIngestIndex(spark, dir)
+    assert(split === 40L, s"fixture split moved: $split")
+    assert(incr.find(_._1 == 47L).map(_._4).contains(text47))
+    val statePath = tempDir("graft-ingadm-uniq-st").toString + "/state"
+    val outPath = tempDir("graft-ingadm-uniq-out").toString + "/out"
+    // one micro-batch: every election of 45/47/50 runs in one trigger
+    val got = runIngestAdmission(dir, idx, split, Seq(incr), statePath, outPath)
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("verdict"))
+    val wantAll = want :+ (50L -> "exact_dup")
+    assert(got === wantAll)
+    def assertUnique(what: String, v: org.apache.spark.sql.DataFrame): Unit = {
+      val r = v.agg(count(lit(1)), countDistinct($"doc_id")).head()
+      assert(r.getLong(0) === r.getLong(1),
+        s"$what verdicts repeat a doc_id: ${r.getLong(0)} rows, ${r.getLong(1)} docs")
+    }
+    assertUnique("stream", spark.read.parquet(outPath))
+    val batch = IngestIncr.batchVerdictsFor(spark, dir, split)
+    assertUnique("batch", batch)
+    assert(batch.collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("verdict")).toSeq === wantAll)
   }
 
   test("LIVE ingest admission: state compaction — verdicts bit-equal and re-delivery idempotent across the boundary; dir count bounded (r20)") {
@@ -1351,7 +1385,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("LIVE ingest admission: a re-delivered batch reuses no live memo from its first delivery (r20)") {
-    import graft.operators.{IngestIncr, Similarity}
+    import graft.operators.{IngestIncr, RunCaches}
     // VERDICT r19 #3: the memo stamp is keyed to (statePath, batchId)
     // with a per-delivery attempt — attributable (ver >>> 20 = batchId)
     // and strictly larger on re-delivery, so cachedFeature supersedes
@@ -1366,12 +1400,12 @@ class StreamingSpec extends SparkSpec {
     val df = docs.take(2).toDF("doc_id", "source", "lang", "text")
     IngestIncr.admitMicroBatch(spark, df, 0L, idx, split, statePath, outPath)
     val key = s"pipe_ingest_stream:$statePath:gate"
-    val v1 = Similarity.featureVersionOf(spark, key)
+    val v1 = RunCaches.featureVersionOf(spark, key)
     assert(v1.nonEmpty, "gate memo not live after first delivery")
     assert((v1.get >>> 20) === 0L,
       s"stamp ${v1.get} does not attribute to batch 0")
     IngestIncr.admitMicroBatch(spark, df, 0L, idx, split, statePath, outPath)
-    val v2 = Similarity.featureVersionOf(spark, key)
+    val v2 = RunCaches.featureVersionOf(spark, key)
     assert(v2.nonEmpty && v2.get > v1.get,
       s"re-delivery must mint a strictly larger stamp (got $v1 then $v2) " +
         "— a reused live memo would mask state drift between deliveries")
