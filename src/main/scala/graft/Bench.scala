@@ -246,17 +246,9 @@ object Bench {
         val qe = q.run(spark, dir).queryExecution
         qe.toRdd.count()
         val wall = math.round((System.nanoTime() - w0) / 1e6) / 1000.0
-        // listener bus is async; poll until the stage list stops growing
-        // (bounded at 5 s). A fixed 500 ms could truncate the evidence
-        // exactly when it matters — this dump fires during loaded
-        // windows, when the bus drains slowest (r13 sweep).
-        var seen = -1
-        var waited = 0
-        while (stages.size() != seen && waited < 5000) {
-          seen = stages.size()
-          Thread.sleep(500)
-          waited += 500
-        }
+        // listener bus is async: drain it, so the stage list is complete
+        // even in the loaded windows this dump fires in
+        org.apache.spark.GraftBus.drain(spark.sparkContext)
         // per-operator SQL metrics (output rows, op wall time) — the
         // stage names alone cannot say WHICH operator a straggler stage
         // was running (r14 sf10 attribution); walk the executed tree

@@ -450,8 +450,8 @@ object BenchStreams {
     val wall = (System.nanoTime() - t0) / 1e9
     val progress = q.recentProgress.toSeq
     q.stop()
-    // listener bus is async; give it a moment to drain before reading
-    Thread.sleep(500)
+    // listener bus is async: drain it before reading the job counts
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
     spark.sparkContext.removeSparkListener(jobListener)
     val batches = progress.filter(_.numInputRows > 0)
     val rows = batches.map(_.numInputRows).sum

@@ -14,10 +14,13 @@ package graft
   * sbt "runMain graft.TimeIncr spans=500,1000,2000,4000 /tmp/graft-sf1"
   * }}}
   *
-  * `family=` selects the index family (minhash default, simhash, phash,
-  * embedding) — all four ride the same [[operators.Similarity.writeIncrIndex]]/
-  * [[operators.Similarity.probeIncrIndex]] core, so this harness measures
-  * the shared machinery under each family's feature kernel.
+  * `family=` selects the index family by name (minhash default,
+  * simhash, phash, embedding) from [[operators.Similarity.incrFamilies]];
+  * all four ride the same [[operators.Similarity.writeIndex]]/
+  * [[operators.Similarity.probeIndex]] core, so this harness measures
+  * the shared machinery under each family's feature kernel. The INCR
+  * line's row counts are the family's `counted` rows (for phash, only
+  * the image rows with a payload).
   *
   * The increment is the FIRST tier's natural 20% id slice; the SAME id
   * count is carved off the top of every later tier's id range, so the
@@ -35,44 +38,6 @@ package graft
   * per-pass times go to stderr, one `INCR` line per tier plus a `RATIO`
   * line to stdout. */
 object TimeIncr {
-
-  /** One family's harness surface: index write/probe, the corpus
-    * relation whose max id anchors the split, and the ROW-COUNTED frame
-    * — what the index actually fingerprints, which for phash is only
-    * the image third of the documents ids (counting the full relation
-    * would overstate the indexed/probed workload ~3×). */
-  private final case class Fam(
-      write: (org.apache.spark.sql.SparkSession, String, String, Long, Int) => Unit,
-      probe: (org.apache.spark.sql.SparkSession, String, String, Long, Int) =>
-        org.apache.spark.sql.DataFrame,
-      corpus: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame,
-      idCol: String,
-      counted: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)
-
-  private val fams: Map[String, Fam] = {
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val docs = (s: org.apache.spark.sql.SparkSession, d: String) =>
-      Tables(s, d).documents
-    val embs = (s: org.apache.spark.sql.SparkSession, d: String) =>
-      Tables(s, d).embeddings
-    Map(
-      "minhash" -> Fam(operators.Similarity.writeMinhashIndex,
-        operators.Similarity.probeMinhashIndex, docs, "doc_id", docs),
-      "simhash" -> Fam(operators.Similarity.writeSimhashIndex,
-        operators.Similarity.probeSimhashIndex, docs, "doc_id", docs),
-      "phash" -> Fam(operators.Multimodal.writePhashIndex,
-        operators.Multimodal.probePhashIndex, docs, "doc_id",
-        // only doc_id % 3 == 0 ids are image media (Multimodal.media),
-        // and NULL-text docs are never fingerprinted (phashFeatOf's
-        // payload guard) — counting them would overstate the indexed/
-        // probed row basis the INCR line reports (r13 sweep)
-        (s, d) => docs(s, d).filter(
-          pmod(col("doc_id"), lit(3)) === lit(0) && col("text").isNotNull)),
-      "embedding" -> Fam(operators.Similarity.writeEmbeddingIndex,
-        operators.Similarity.probeEmbeddingIndex, embs, "vec_id", embs))
-  }
 
   def main(args: Array[String]): Unit = {
     val usage = "usage: TimeIncr [family=minhash|simhash|phash|embedding] " +
@@ -99,24 +64,24 @@ object TimeIncr {
           throw new IllegalArgumentException(s"unknown option '$a'; $usage")
       }
     }
-    val fam = fams.getOrElse(family,
-      throw new IllegalArgumentException(s"unknown family '$family'; $usage"))
+    val fam = operators.Similarity.incrFamilies.find(_.name == family)
+      .getOrElse(throw new IllegalArgumentException(
+        s"unknown family '$family'; $usage"))
     val dirs = rest
     require(dirs.nonEmpty, usage)
     val spark = Engine.session(appName = "graft-time-incr")
     import org.apache.spark.sql.functions.{col, count, max, when}
     val maxIds = dirs.map { dir =>
-      val r = fam.corpus(spark, dir).agg(max(col(fam.idCol))).head()
-      require(!r.isNullAt(0), s"empty ${fam.idCol} corpus at $dir")
+      val r = Tables(spark, dir).byName(fam.table)
+        .agg(max(col(fam.splitIdCol))).head()
+      require(!r.isNullAt(0), s"empty ${fam.splitIdCol} corpus at $dir")
       dir -> r.getLong(0)
     }.toMap
     val spans = spansArg.getOrElse(Seq(maxIds(dirs.head) / 5)) // natural slice
     // honor the session's shard conf so the harness measures the layout a
-    // deployment actually configures (build and probe stay paired) — the
-    // FAMILY's conf, resolved exactly as the production ensure path
-    // resolves it (family name → minhash fallback → default), so a
-    // per-family override measures the layout that family actually uses
-    val shards = operators.Similarity.confShards(spark, family)
+    // deployment actually configures (build and probe stay paired),
+    // resolved exactly as the production ensure path resolves it
+    val shards = operators.Similarity.confShards(spark)
     val tiers = for (dir <- dirs; span <- spans) yield {
       val split = maxIds(dir) - span
       // the span must carve a real increment out of a real corpus: a
@@ -127,8 +92,8 @@ object TimeIncr {
       // silently-garbage O(increment) measurement instead of the loud
       // failure every other option here gets (r13 sweep)
       require(span > 0 && split > 0,
-        s"span $span must be in (0, max ${fam.idCol}=${maxIds(dir)}) for $dir")
-      val cnt = fam.counted(spark, dir).agg(
+        s"span $span must be in (0, max ${fam.splitIdCol}=${maxIds(dir)}) for $dir")
+      val cnt = fam.counted(fam.corpus(spark, dir)).agg(
         count(when(col(fam.idCol) >= split, 1)).as("incr"),
         count(when(col(fam.idCol) < split, 1)).as("corpus")).head()
       (dir, split, cnt.getLong(0), cnt.getLong(1))
@@ -148,11 +113,11 @@ object TimeIncr {
         // new registered cache (r13 sweep)
         operators.RunCaches.clearAll()
         val b0 = System.nanoTime()
-        fam.write(spark, dir, idx, split, shards)
+        operators.Similarity.writeIndex(spark, fam, dir, idx, split, shards)
         val bSec = (System.nanoTime() - b0) / 1e9
         operators.RunCaches.clearAll()
         val p0 = System.nanoTime()
-        fam.probe(spark, dir, idx, split, shards)
+        operators.Similarity.probeIndex(spark, fam, dir, idx, split, shards)
           .write.format("noop").mode("overwrite").save()
         val pSec = (System.nanoTime() - p0) / 1e9
         samples(("build", s"$dir@$split")) =

@@ -90,9 +90,10 @@ object IngestIncr {
     * [[pipeIngestKernelFp]]. */
   def ensurePipeIngestIndex(s: SparkSession, dir: String): (String, Long) =
     Similarity.ensureVersionedIndex(s, dir, s"mhp1-$pipeIngestKernelFp",
-      "minhash", Seq("bands", "toks", "fps", "bsh"),
+      Seq("bands", "toks", "fps", "bsh"),
       (staging, split, shards) =>
-        buildPipeIngestIndex(s, dir, staging, split, shards))
+        buildPipeIngestIndex(s, dir, staging, split, shards),
+      "documents", "doc_id")
 
   /** Marker file naming an index part that is legitimately EMPTY.
     * A 0-row partitionBy parquet write produces NO data files and the
@@ -228,7 +229,8 @@ object IngestIncr {
     }
     if (feat.filter(size(col("bands")) > lit(0)).isEmpty) {
       markEmpty(s, s"$staging/bands"); markEmpty(s, s"$staging/toks")
-    } else Similarity.writeMinhashIndexOf(s, staging, shards, feat)
+    } else Similarity.writeIncrIndex(s, staging, shards,
+      Similarity.minhashFamily, feat)
   }
 
   /** Pruned-or-empty index-part read — `writeOrMark`'s probe-side half.
@@ -408,9 +410,11 @@ object IngestIncr {
         case None =>
           if (isMarkedEmpty(s, s"$idx/bands"))
             Similarity.minhashDedupOf(feat)
-          else Similarity.probeMinhashIndexOf(s, idx, split, shards, feat, ver)
+          else Similarity.probeIncrIndex(s, idx, split, shards,
+            Similarity.minhashFamily, feat, ver)
         case Some(st) =>
-          Similarity.probeMinhashIndexOf(s, idx, split, shards, feat, ver,
+          Similarity.probeIncrIndex(s, idx, split, shards,
+            Similarity.minhashFamily, feat, ver,
             readPart = (p, ddl) => probeRead(s, p, ddl),
             extra = if (stateBandsEmpty) None else Some((st.bands, st.toks)),
             memoSuffix = ":stream")
@@ -667,21 +671,17 @@ object IngestIncr {
     *
     * The rewrite is state-sized every `admissionCompactEvery` batches —
     * amortized O(state/K) per trigger, the standard LSM posture — and
-    * the folded parts are coalesced to `admissionGenFiles` files each
-    * (default 1: stream state is survivor-sized; a deploy whose state
-    * outgrows single-writer throughput raises it). */
+    * each folded part is written as one file (stream state is
+    * survivor-sized). */
   private def compactState(s: SparkSession, statePath: String,
       loc: StateLoc): StateLoc = {
     val through = loc.deltas.max
     val st = loadState(s, statePath, loc)
-    val nFiles = s.conf.get("spark.graft.admissionGenFiles", "1").toInt
     val genDir = s"$statePath/gen$through"
     val bound = committedMaxId(s, statePath, loc)
-    st.fps.repartition(nFiles).write.mode("overwrite").parquet(s"$genDir/fps")
-    st.bands.repartition(nFiles).write.mode("overwrite")
-      .parquet(s"$genDir/bands")
-    st.toks.repartition(nFiles).write.mode("overwrite")
-      .parquet(s"$genDir/toks")
+    st.fps.repartition(1).write.mode("overwrite").parquet(s"$genDir/fps")
+    st.bands.repartition(1).write.mode("overwrite").parquet(s"$genDir/bands")
+    st.toks.repartition(1).write.mode("overwrite").parquet(s"$genDir/toks")
     writeMarker(s, genDir, bound)
     // idempotent sweep AFTER the marker: everything the new generation
     // supersedes, including husks a crashed earlier compaction left

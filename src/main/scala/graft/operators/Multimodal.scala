@@ -520,8 +520,8 @@ object Multimodal {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** The 64-bit hamming verify tail shared by [[phashDedupOf]] and
-    * [[probePhashIndex]] — ONE definition, so the probe==batch equality
-    * contract cannot drift on the distance or threshold. */
+    * [[Similarity.probeIndex]] — ONE definition, so the probe==batch
+    * equality contract cannot drift on the distance or threshold. */
   private def phashVerify(cand: DataFrame, dPh: DataFrame,
       kPh: DataFrame): DataFrame =
     cand.join(dPh, Seq("media_id")).join(kPh, Seq("keeper"))
@@ -632,17 +632,16 @@ object Multimodal {
       WITH $phashOracleCtes
       ${phashOracleTail("")}"""))
 
-  /** Ingest-time half of INCREMENTAL image dedup — the third
-    * instantiation of [[Similarity.ensureVersionedIndex]] (after
-    * MinHash and SimHash), closing the image modality's re-scan gap:
-    * persists the corpus images' (band, bucket, keeper) frame
-    * partitioned by (band, bshard) plus a (media_id, ph) side table for
-    * exactly the bucket keepers, partitioned by pshard. The corpus is
-    * hashed ONCE here, at ingest. */
-  /** pHash family shape for the shared
-    * [[Similarity.writeIncrIndex]]/[[Similarity.probeIncrIndex]] core. */
-  private val phFamily = Similarity.IncrFamily(
-    what = "probePhashIndex",
+  /** pHash family, over the image media derived from the documents
+    * table (versioned by its max doc_id and mtime): the keeper side
+    * table holds (media_id, ph) for exactly the bucket keepers. Only
+    * image rows with a payload are hashed at all, so only those count
+    * as indexed. */
+  private[graft] lazy val phashFamily = Similarity.IncrFamily(
+    name = "phash", query = "mm_phash_incr", what = "probePhashIndex",
+    table = "documents", splitIdCol = "doc_id",
+    corpus = media, featOf = phashFeatOf,
+    prefix = s"ph-$phashKernelFp",
     idCol = "media_id", featSubdir = "phs", featShardCol = "pshard",
     sideDdl = "media_id BIGINT, ph ARRAY<INT>, pshard BIGINT",
     bandedOf = phashBandedOf,
@@ -650,54 +649,18 @@ object Multimodal {
     kRename = d => d.select(col("media_id").as("keeper"), col("ph").as("k_ph")),
     verify = (cand, feat, kSide) =>
       phashVerify(cand,
-        feat.select(col("media_id"), col("ph").as("d_ph")), kSide))
-
-  def writePhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = Similarity.minhashIndexShards): Unit =
-    Similarity.writeIncrIndex(s, indexPath, shards, phFamily,
-      RunCaches.cachedFeature(s, s"mm_phash_incr:$dir:corpus$split", RunCaches.srcVersion(s, dir, "documents.parquet")) {
-        phashFeatOf(media(s, dir).filter(col("media_id") < lit(split)))
-      })
-
-  /** Query-time half: dedups the increment's images (media_id >= split)
-    * against the persisted index WITHOUT re-hashing the corpus — same
-    * probe discipline as [[Similarity.probeMinhashIndex]]: pruned bands
-    * read (bounded collect, ≤ 8 × shards partition keys), least-merge
-    * of per-bucket keepers (with append-only ids that IS the bucket
-    * minimum over corpus ∪ increment), pruned keeper-hash read. Output
-    * equals the full [[mmPhashDedup]] restricted to the increment. */
-  def probePhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = Similarity.minhashIndexShards): DataFrame = {
-    val srcVer = RunCaches.srcVersion(s, dir, "documents.parquet")
-    Similarity.probeIncrIndex(s, indexPath, split, shards, phFamily,
-      RunCaches.cachedFeature(s, s"mm_phash_incr:$dir:incr$split", srcVer) {
-        phashFeatOf(media(s, dir).filter(col("media_id") >= lit(split)))
-      }, srcVer)
-  }
-
-  /** pHash instantiation of [[Similarity.ensureVersionedIndex]]. */
-  def ensurePhashIndex(s: SparkSession, dir: String): (String, Long) =
-    Similarity.ensureVersionedIndex(s, dir, s"ph-$phashKernelFp", "phash",
-      Seq("bands", "phs"),
-      (staging, split, shards) => writePhashIndex(s, dir, staging, split, shards))
+        feat.select(col("media_id"), col("ph").as("d_ph")), kSide),
+    counted = _.filter(col("kind") === lit("image") && col("bytes").isNotNull))
 
   /** mm_phash_incr: incremental image dedup against the persisted phash
-    * index. ORACLE-EXACT — the first `_incr` query to be (r11): the
+    * index. ORACLE-EXACT — the first `_incr` query to be: the
     * average-hash is portable integer math and the split is
     * SQL-expressible (max id − max id / 5), so DuckDB recomputes the
     * full election from the same source bytes and restricts it to the
     * increment — the incremental machinery's output is checked against
     * an independent engine, not just against our own batch path (which
-    * the SemanticsSpec equality additionally pins). The minhash/simhash
-    * twins followed in r15 once their kernels moved to md5-derived
-    * portable hashes. */
-  val mmPhashIncr = QueryDef(
-    "mm_phash_incr",
-    (s, dir) => {
-      val (idx, split) = ensurePhashIndex(s, dir)
-      // no shards argument: the path's -sN suffix is authoritative
-      probePhashIndex(s, dir, idx, split)
-    },
+    * the SemanticsSpec equality additionally pins). */
+  val mmPhashIncr = Similarity.incrQuery(phashFamily,
     oracle = Some(s"""
       WITH sp AS (
         SELECT MAX(doc_id) - MAX(doc_id) // 5 AS split FROM documents),

@@ -126,8 +126,7 @@ object ScaleOps {
     * posture as the IVF centroid build. Throws if `maxIter` is hit
     * before the fixpoint rather than returning a half-merged
     * clustering. */
-  /** Per-iteration checkpoint for the fixpoint algorithms
-    * ([[connectedComponents]], [[connectedComponentsStars]]).
+  /** Per-iteration checkpoint for the [[connectedComponents]] fixpoint.
     * Reliable-checkpoint option: localCheckpoint blocks die with their
     * executor, which kills the whole fixpoint at cluster scale. When the
     * caller sets spark.graft.checkpointDir, iteration state goes through
@@ -135,8 +134,8 @@ object ScaleOps {
     * first set wins per SparkContext). Locally the default stays
     * localCheckpoint — no filesystem churn in tests/bench. */
   /** The fixpoint checkpoint-dir conf, with the forked-harness env
-    * fallback (same pattern as SPARK_GRAFT_CCALGO: sbt `run` forks, so a
-    * -D on the sbt command line never reaches the run JVM). */
+    * fallback (sbt `run` forks, so a -D on the sbt command line never
+    * reaches the run JVM). */
   private def ckptDirConf(spark: SparkSession): Option[String] =
     spark.conf.getOption("spark.graft.checkpointDir")
       .orElse(sys.env.get("SPARK_GRAFT_CKPT_DIR"))
@@ -262,122 +261,6 @@ object ScaleOps {
     }
     // the returned frame is itself a checkpoint: harness resets free it
     RunCaches.releaseAtClear(labels)(unpersistCheckpoint(labels))
-    labels
-  }
-
-  /** Alternative connected-components realization: the alternating
-    * large-star / small-star edge rewriting (Kiveris, Lattanzi, Mirrokni,
-    * Rastogi, Vassilvitskii — "Connected Components in MapReduce and
-    * Beyond", SoCC 2014). Output contract is IDENTICAL to
-    * [[connectedComponents]]: (node, label) with label = min reachable
-    * id; ScaleOpsSpec asserts exact agreement on shared fixtures.
-    *
-    * Shape per iteration — two grouped rewrites over the EDGE set only
-    * (no separate labels relation, unlike min-label propagation):
-    * large-star attaches every neighbor LARGER than a center to the
-    * center's minimum (including itself); small-star attaches every
-    * smaller neighbor, and the center, to the minimum of the center's
-    * smaller neighborhood. Both preserve connectivity and strictly
-    * shrink the potential until the edge set is a union of stars whose
-    * hubs are the component minima; O(log² n) rounds worst case, and on
-    * high-degree (skewed) components it collapses the hub's whole
-    * neighborhood per round where label propagation moves one hop of
-    * labels through the same hub join. Convergence is detected on the
-    * edge set itself (count + one-sided except over materialized
-    * checkpoints); the converged set is additionally VALIDATED as a
-    * union of stars (no hub is a satellite, one hub per satellite) so a
-    * non-star fixpoint can never silently mislabel — same loud posture
-    * as the maxIter throw.
-    *
-    * Measured against [[connectedComponents]] at the sf10 probe before
-    * choosing g1_components' realization — see SURVEY §6.13 for the
-    * numbers and the decision record. */
-  def connectedComponentsStars(edges: DataFrame, src: String, dst: String,
-      maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    val ckpt = iterCkpt(spark)
-    val raw = edges
-      .select(col(src).cast("long").as("a"), col(dst).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    // the node set is fixed by the INPUT (edges only shrink toward
-    // stars); captured up front, one checkpoint, reused by the final join
-    raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = ckpt(raw.select(col("a").as("node"))
-      .union(raw.select(col("b").as("node"))).distinct())
-    // canonical x > y; duplicates collapsed once here and per iteration
-    // (both rewrites re-derive edges, so dedup bounds the set at |E|)
-    var e = ckpt(raw.select(greatest(col("a"), col("b")).as("x"),
-      least(col("a"), col("b")).as("y")).distinct())
-    raw.unpersist(blocking = false)
-    var cnt = e.count()
-    var iter = 0
-    var converged = cnt == 0L
-    while (!converged && iter < maxIter) {
-      // large-star: center u over BOTH directions; m = min(Γ(u) ∪ {u});
-      // every larger neighbor re-attaches to m
-      val nbr = e.select(col("x").as("u"), col("y").as("v"))
-        .union(e.select(col("y").as("u"), col("x").as("v")))
-      val mins = nbr.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      // m ≤ u < v, so the output is already canonical (larger, smaller)
-      val ls = nbr.join(mins, Seq("u")).filter(col("v") > col("u"))
-        .select(col("v").as("x"), col("m").as("y")).distinct()
-      // small-star: Γ⁻(x) = smaller neighbors (the canonical form IS the
-      // grouping); m = min(Γ⁻(x)); every smaller neighbor AND the center
-      // re-attach to m
-      val m2 = ls.groupBy("x").agg(min(col("y")).as("m"))
-      val next = ckpt(
-        ls.join(m2, Seq("x")).select(col("y").as("p"), col("m").as("q"))
-          .union(m2.select(col("x").as("p"), col("m").as("q")))
-          .filter(col("p") =!= col("q"))
-          .select(greatest(col("p"), col("q")).as("x"),
-            least(col("p"), col("q")).as("y"))
-          .distinct())
-      val nextCnt = next.count()
-      // set equality over two materialized checkpoints: same cardinality
-      // + nothing new on one side ⇒ equal (both sides are distinct sets)
-      converged = nextCnt == cnt && next.except(e).limit(1).count() == 0L
-      unpersistCheckpoint(e)
-      e = next
-      cnt = nextCnt
-      iter += 1
-    }
-    if (!converged) {
-      scala.util.Try(unpersistCheckpoint(e))
-      scala.util.Try(unpersistCheckpoint(nodes))
-      throw new IllegalStateException(
-        s"connectedComponentsStars did not converge in $maxIter iterations")
-    }
-    // validate star-ness before labeling: the convergence test proves a
-    // fixpoint of the LS∘SS composite, and every such fixpoint should be
-    // a union of stars — but a wrong label is worse than a loud failure,
-    // so prove it on the converged set: no hub is also a satellite, and
-    // every satellite has exactly one hub
-    if (cnt > 0L) {
-      val hubAsSat = e.select(col("y").as("n"))
-        .intersect(e.select(col("x").as("n")))
-      // count(*), not countDistinct: e is a distinct set (constructed by
-      // .distinct() and kept one by the convergence invariant), so the
-      // per-x row count IS the distinct-parent count — no per-group
-      // dedup pass on the one corpus-scale validation this runs
-      val multiHub = e.groupBy("x").agg(count(lit(1)).as("k"))
-        .filter(col("k") > 1)
-      if (!hubAsSat.isEmpty || !multiHub.isEmpty) {
-        // same reclaim discipline as the maxIter throw: an error path
-        // must not pin two corpus-scale checkpoints for the session
-        scala.util.Try(unpersistCheckpoint(e))
-        scala.util.Try(unpersistCheckpoint(nodes))
-        throw new IllegalStateException(
-          "connectedComponentsStars: converged edge set is not a union " +
-            "of stars — refusing to emit labels from a malformed fixpoint")
-      }
-    }
-    val labels = nodes
-      .join(e.select(col("x").as("node"), col("y").as("lbl")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("lbl"), col("node")).as("label"))
-    // both surviving checkpoints feed the returned lazy frame
-    RunCaches.releaseAtClear(e)(unpersistCheckpoint(e))
-    RunCaches.releaseAtClear(nodes)(unpersistCheckpoint(nodes))
     labels
   }
 
@@ -551,24 +434,8 @@ object ScaleOps {
         .select(col("o_custkey"), col("o_orderkey"))
         .withColumn("prev", lag(col("o_orderkey"), 1).over(w))
         .filter(col("prev").isNotNull)
-      // spark.graft.ccAlgo selects the fixpoint realization — "jump"
-      // (min-label + pointer jumping, the default) or "stars"
-      // (large-star/small-star edge rewriting). Output-identical
-      // (ScaleOpsSpec pins both the kernel equivalence and this very
-      // query across the switch); the switch exists so the two can be
-      // A/B-measured under the SAME harness at the sf10 probe — the
-      // r15 verdict-#5 adjudication recorded in SURVEY §6.13. The env
-      // fallback is the forked-harness path (sbt `run` forks, so a -D
-      // on the sbt command line never reaches the run JVM).
-      val cc = s.conf.getOption("spark.graft.ccAlgo")
-        .orElse(sys.env.get("SPARK_GRAFT_CCALGO"))
-        .getOrElse("jump") match {
-        case "stars" => connectedComponentsStars(edges, "prev", "o_orderkey")
-        case "jump" => connectedComponents(edges, "prev", "o_orderkey")
-        case other => sys.error(
-          s"spark.graft.ccAlgo must be jump or stars, got $other")
-      }
-      cc.select(col("node"), col("label").as("component"))
+      connectedComponents(edges, "prev", "o_orderkey")
+        .select(col("node"), col("label").as("component"))
         .orderBy(col("node"))
     },
     oracle = Some("""

@@ -550,7 +550,7 @@ object Similarity {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** The exact-Jaccard verify tail shared by [[minhashDedupOf]] and
-    * [[probeMinhashIndex]]: join (doc_id, keeper) candidates to both
+    * [[probeIndex]]: join (doc_id, keeper) candidates to both
     * token sides and keep pairs at ≥ 50% Jaccard. ONE definition — the
     * probe==batch equality contract rests on the threshold and the
     * integer-div expression never diverging between the two callers. */
@@ -862,7 +862,7 @@ object Similarity {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** The hamming verify tail shared by [[simhashDedupOf]] and
-    * [[probeSimhashIndex]] — ONE definition, so the probe==batch
+    * [[probeIndex]] — ONE definition, so the probe==batch
     * equality contract cannot drift on the distance or threshold. */
   private def hammingVerify(cand: DataFrame, dSim: DataFrame,
       kSim: DataFrame): DataFrame =
@@ -984,7 +984,7 @@ object Similarity {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** The exact-cosine verify tail shared by [[embDedupOf]] and
-    * [[probeEmbeddingIndex]] — ONE definition, so the probe==batch
+    * [[probeIndex]] — ONE definition, so the probe==batch
     * equality contract cannot drift on the score or threshold.
     * Degenerate pairs are EXCLUDED like [[rankTop5]]'s guard, not
     * emitted: a zero-norm side would make cos 0/0 = NaN — which
@@ -1254,30 +1254,27 @@ object Similarity {
 
   /** Shard count a published version path was built with, parsed from
     * its name. Matches ONLY the full `v<split>-<mtime>-s<N>` version
-    * shape [[ensureMinhashIndex]] itself publishes — a custom index
+    * shape [[ensureVersionedIndex]] itself publishes — a custom index
     * location that merely happens to end in `-s<digits>` is the
     * caller's own layout, governed by their explicit argument. */
   private[graft] def indexShardsOf(indexPath: String): Option[Int] =
     "(^|/)v\\d+-\\d+-s(\\d{1,9})/*$".r
       .findFirstMatchIn(indexPath).map(_.group(2).toInt)
 
-  /** Session shard count: the family's own conf first, then the
-    * `minhash` name (the subsystem default under its historical name),
-    * then [[minhashIndexShards]] — the SAME resolution order as
-    * [[ensureVersionedIndex]], and its single reader, so build, probe,
-    * version-name and any measurement harness can never disagree
-    * within a session. */
-  private[graft] def confShards(
-      s: SparkSession, confFamily: String = "minhash"): Int = {
-    val n = s.conf.getOption(s"spark.graft.$confFamily.indexShards")
-      .orElse(s.conf.getOption("spark.graft.minhash.indexShards"))
-      .getOrElse(minhashIndexShards.toString).toInt
+  /** Session shard count: `spark.graft.minhash.indexShards` (the
+    * subsystem-wide setting under its historical name, for every
+    * family), else [[minhashIndexShards]] — [[ensureVersionedIndex]]'s
+    * single reader, so build, probe, version-name and any measurement
+    * harness can never disagree within a session. */
+  private[graft] def confShards(s: SparkSession): Int = {
+    val n = s.conf.get("spark.graft.minhash.indexShards",
+      minhashIndexShards.toString).toInt
     // upper bound = what indexShardsOf's 9-digit parse can read back: a
     // 10-digit count would publish a version name the probe CANNOT
     // parse, silently falling back to the caller's default modulus and
     // mis-pruning — refuse here, where the layout is named
     require(n > 0 && n <= 999999999,
-      s"spark.graft.$confFamily.indexShards must be in [1, 999999999], got $n")
+      s"spark.graft.minhash.indexShards must be in [1, 999999999], got $n")
     n
   }
 
@@ -1311,18 +1308,30 @@ object Similarity {
       shards: Int): org.apache.spark.sql.Column =
     band.cast("long") * lit(shards.toLong) + bshard.cast("long")
 
-  /** The column-level shape of one incremental index family — the
-    * second axis of genericity next to [[ensureVersionedIndex]] (which
-    * owns versioning/publish): everything the shared
-    * [[writeIncrIndex]]/[[probeIncrIndex]] bodies need to serve
-    * MinHash, SimHash, image pHash and embedding LSH from ONE
-    * implementation, so a pruning or merge fix can never land in one
-    * family and drift from the others.
+  /** One incremental dedup index family — MinHash, SimHash, image
+    * pHash or embedding LSH — defined once: [[ensureIndex]],
+    * [[writeIndex]] and [[probeIndex]] (and the feature-frame cores
+    * [[writeIncrIndex]]/[[probeIncrIndex]] under them) serve every
+    * family from ONE implementation, so a pruning, merge or versioning
+    * fix can never land in one family and drift from the others.
+    *
+    * `name` — the family's name (TimeIncr's `family=`). `query` — its
+    * `_incr` catalog query, also the stem of its feature memo keys.
+    * `what` — its label in job descriptions, errors and candidate memo
+    * keys. `table`/`splitIdCol` — the catalog table whose max id
+    * anchors the split and whose mtime versions the index and the
+    * feature memos. `corpus` — (session, dir) → the rows the kernel
+    * reads; `featOf` — the feature kernel over them. `prefix` — the
+    * index base-directory prefix: a family tag plus the kernel
+    * fingerprint, so a kernel change moves the base. `counted` — the
+    * corpus rows a measurement reports as indexed (phash hashes only
+    * image rows with a payload).
     *
     * `idCol` — the corpus id (doc_id/media_id/vec_id; ids are
     * append-only, which is what makes least-merge the true bucket
     * minimum). `featSubdir`/`featShardCol` — the keeper side table's
-    * layout. `bandedOf` — feature frame → (id, band, bucket).
+    * layout; the published layout parts are `bands` and `featSubdir`.
+    * `bandedOf` — feature frame → (id, band, bucket).
     * `sideOf` — feature frame → the keeper side projection (id +
     * verify features), applied identically at build and probe time so
     * both paths drop degenerate rows at the SAME stage. `kRename` — a
@@ -1333,8 +1342,15 @@ object Similarity {
     * expose when it substitutes an empty frame for a legitimately-empty
     * part ([[IngestIncr]]'s marker protocol; unused under the default
     * parquet reader). */
-  private[operators] final case class IncrFamily(
+  private[graft] final case class IncrFamily(
+      name: String,
+      query: String,
       what: String,
+      table: String,
+      splitIdCol: String,
+      corpus: (SparkSession, String) => DataFrame,
+      featOf: DataFrame => DataFrame,
+      prefix: String,
       idCol: String,
       featSubdir: String,
       featShardCol: String,
@@ -1347,6 +1363,7 @@ object Similarity {
       // wrong by construction — a compile error beats the mid-probe
       // require the first fix used
       sideDdl: String,
+      counted: DataFrame => DataFrame,
       bandsDdl: String = "band INT, bucket BIGINT, keeper BIGINT, bshard BIGINT")
 
   /** Ingest-time half shared by every family: persists the corpus's
@@ -1526,12 +1543,19 @@ object Similarity {
     fam.verify(cand, feat, kSide)
   }
 
-  /** MinHash family shape. The size(toks) > 0 guard lives in `sideOf`,
+  /** MinHash family. The size(toks) > 0 guard lives in `sideOf`,
     * applied identically at build and probe, so probe ≡ batch equality
     * never depends on the Jaccard threshold happening to discard
     * empty-k_toks pairs. */
-  private val mhFamily = IncrFamily(
-    what = "probeMinhashIndex",
+  private[graft] lazy val minhashFamily = IncrFamily(
+    name = "minhash", query = "dd_minhash_incr", what = "probeMinhashIndex",
+    table = "documents", splitIdCol = "doc_id",
+    corpus = (s, dir) => T(s, dir).documents, featOf = minhashFeatOf,
+    // "mh2" + the kernel fingerprint: the version identity (split, src
+    // mtime, shards) does not cover the banding kernel, and a
+    // pre-switch index would version-match a post-switch probe and
+    // serve bands its banding can never hit (silent empty dedup)
+    prefix = s"mh2-$minhashKernelFp",
     idCol = "doc_id", featSubdir = "toks", featShardCol = "tshard",
     sideDdl = "doc_id BIGINT, toks ARRAY<STRING>, tshard BIGINT",
     bandedOf = bandedOf,
@@ -1541,73 +1565,43 @@ object Similarity {
     verify = (cand, feat, kSide) =>
       jaccardVerify(cand,
         feat.select(col("doc_id"), col("toks"))
-          .filter(size(col("toks")) > lit(0)), kSide))
+          .filter(size(col("toks")) > lit(0)), kSide),
+    counted = identity)
 
-  def writeMinhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): Unit =
-    // a direct filtered scan (doc_id pushed to parquet), NOT the
-    // full-corpus cache: ingest reads the corpus slice once, and the
-    // cache serves the build's two write branches
-    writeIncrIndex(s, indexPath, shards, mhFamily,
-      RunCaches.cachedFeature(s, s"dd_minhash_incr:$dir:corpus$split", RunCaches.srcVersion(s, dir, "documents.parquet")) {
-        minhashFeatOf(T(s, dir).documents.filter(col("doc_id") < lit(split)))
+  /** Every incremental index family, by [[IncrFamily.name]]. */
+  private[graft] def incrFamilies: Seq[IncrFamily] = Seq(minhashFamily,
+    simhashFamily, Multimodal.phashFamily, embeddingFamily)
+
+  /** Ingest-time half over `dir`'s corpus slice below `split`: a direct
+    * filtered scan (the id filter pushed to parquet), NOT the
+    * full-corpus cache — ingest reads the corpus slice once, and the
+    * memo serves the build's two write branches. */
+  def writeIndex(s: SparkSession, fam: IncrFamily, dir: String,
+      indexPath: String, split: Long,
+      shards: Int = minhashIndexShards): Unit =
+    writeIncrIndex(s, indexPath, shards, fam,
+      RunCaches.cachedFeature(s, s"${fam.query}:$dir:corpus$split",
+          RunCaches.srcVersion(s, dir, s"${fam.table}.parquet")) {
+        fam.featOf(fam.corpus(s, dir).filter(col(fam.idCol) < lit(split)))
       })
 
-  /** Query-time half: dedups the increment (doc_id >= split) against the
-    * persisted index WITHOUT re-scanning the corpus. The increment is
-    * banded with the shared kernel; the bands-index read is pruned to
-    * the (band, bshard) partitions the increment actually touches
-    * (bounded collect, ≤ 8 × [[minhashIndexShards]] values no matter
-    * the corpus size); per-bucket keepers merge as `least(index keeper,
-    * increment min)` — with append-only ids (every increment id > every
-    * corpus id) that IS the bucket minimum over corpus ∪ increment, so
-    * the output equals the full [[ddMinhash]] recompute restricted to
-    * the increment, a property the equality spec asserts literally.
-    * Verify tokens come from the increment frame plus the index's
-    * keeper side table, the latter read pruned to the `tshard`
-    * partitions the elected corpus keepers occupy (a second bounded
-    * collect over the candidate frame — candidates are ≤ one per
-    * increment doc, so both collects are increment-bounded; the corpus
-    * proper is never read). Both prunings are real when the increment
-    * is small next to the corpus — the steady-state ingest case — and
-    * degrade to full index reads (never corpus reads) for bulk
-    * increments like the test's 20% slice. */
-  def probeMinhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): DataFrame =
-    // increment-only scan (doc_id >= split pushed into the parquet
-    // read): at probe time the corpus proper is never touched — only
-    // the increment rows and the index files. Cached: the frame feeds
-    // banding, the verify side and the candidate-shard collect
-    {
-    val srcVer = RunCaches.srcVersion(s, dir, "documents.parquet")
-    probeIncrIndex(s, indexPath, split, shards, mhFamily,
-      RunCaches.cachedFeature(s, s"dd_minhash_incr:$dir:incr$split", srcVer) {
-        minhashFeatOf(T(s, dir).documents.filter(col("doc_id") >= lit(split)))
+  /** Query-time half: dedups `dir`'s increment (id >= split) against
+    * the persisted index through [[probeIncrIndex]]. The increment is
+    * an increment-only scan (the id filter pushed into the read), so
+    * the corpus proper is never touched — only the increment rows and
+    * the index files; memoized, since the frame feeds banding, the
+    * verify side and the candidate-shard collect. The output equals
+    * the family's full batch dedup restricted to the increment, which
+    * each family's equality spec asserts literally. */
+  def probeIndex(s: SparkSession, fam: IncrFamily, dir: String,
+      indexPath: String, split: Long,
+      shards: Int = minhashIndexShards): DataFrame = {
+    val srcVer = RunCaches.srcVersion(s, dir, s"${fam.table}.parquet")
+    probeIncrIndex(s, indexPath, split, shards, fam,
+      RunCaches.cachedFeature(s, s"${fam.query}:$dir:incr$split", srcVer) {
+        fam.featOf(fam.corpus(s, dir).filter(col(fam.idCol) >= lit(split)))
       }, srcVer)
   }
-
-  /** [[writeIncrIndex]] over the minhash family with a CALLER-OWNED
-    * feature frame — the composed ingest pipeline ([[IngestIncr]])
-    * builds its index over the pipeline's own survivor population, not
-    * the raw corpus slice, so the population is a parameter while the
-    * banding / election / verify kernels stay this family's single
-    * definitions (the probe≡batch equality rests on that sharing). */
-  private[operators] def writeMinhashIndexOf(s: SparkSession,
-      indexPath: String, shards: Int, feat: DataFrame): Unit =
-    writeIncrIndex(s, indexPath, shards, mhFamily, feat)
-
-  /** [[probeIncrIndex]] over the minhash family with a caller-owned
-    * increment feature frame — the probe half of
-    * [[writeMinhashIndexOf]]. `srcVer` is the caller's corpus
-    * fingerprint (see probeIncrIndex's memo-version contract). */
-  private[operators] def probeMinhashIndexOf(s: SparkSession,
-      indexPath: String, split: Long, shards: Int, feat: DataFrame,
-      srcVer: Long,
-      readPart: (String, String) => DataFrame = null,
-      extra: Option[(DataFrame, DataFrame)] = None,
-      memoSuffix: String = ""): DataFrame =
-    probeIncrIndex(s, indexPath, split, shards, mhFamily, feat, srcVer,
-      readPart, extra, memoSuffix)
 
   /** Root under which versioned index directories are published.
     * Defaults to the local tmpdir; a production deploy points it at a
@@ -1620,7 +1614,7 @@ object Similarity {
     * `spark.graft.minhash.indexBase` wins when set, so two sessions in
     * one JVM (a driver session next to a test session) can point at
     * different bases without racing on a global. */
-  private[graft] var minhashIndexBase: String = sys.props("java.io.tmpdir")
+  private[graft] val minhashIndexBase: String = sys.props("java.io.tmpdir")
 
   /** Grace age for reaping: version/staging directories younger than
     * this survive a reap pass, so a concurrent JVM that resolved an
@@ -1634,8 +1628,8 @@ object Similarity {
     * the index store — quiet-gating ages by newest visible file, and a
     * live copy stalled on one huge object must never read as quiet. On
     * non-local schemes the effective window is floored at 5 minutes
-    * (see [[ensureMinhashIndex]]); local/test runs keep the raw conf. */
-  private[graft] var minhashReapGraceMs: Long = 15 * 60 * 1000L
+    * (see [[ensureVersionedIndex]]); local/test runs keep the raw conf. */
+  private[graft] val minhashReapGraceMs: Long = 15 * 60 * 1000L
 
   /** One lock PER INDEX BASE directory, not one global: the publish
     * loop deliberately polls (up to grace + 30 s) while holding its
@@ -1650,20 +1644,21 @@ object Similarity {
   private def idxLockFor(base: String): Object =
     idxLocks.computeIfAbsent(base, _ => new Object)
 
-  /** Default corpus-identity reader: max doc_id of the documents table.
-    * A single-column bounded agg, not the feature cache — warming the
-    * full-corpus frame here would undo the probe's increment-only read. */
-  private def documentsMaxId(s: SparkSession, dir: String): Long = {
-    val maxRow = T(s, dir).documents.agg(max(col("doc_id"))).head()
+  /** Corpus identity: max `idCol` of `table`. A single-column bounded
+    * agg, not the feature cache — warming the full-corpus frame here
+    * would undo the probe's increment-only read. */
+  private def tableMaxId(s: SparkSession, dir: String, table: String,
+      idCol: String): Long = {
+    val maxRow = T(s, dir).byName(table).agg(max(col(idCol))).head()
     require(!maxRow.isNullAt(0),
-      s"index build: documents corpus at $dir is empty — nothing to index")
+      s"index build: $table corpus at $dir is empty — nothing to index")
     maxRow.getLong(0)
   }
 
   /** The versioned-publish machinery shared by every incremental index
-    * family (MinHash and SimHash today — any future pHash/embedding
-    * tier plugs in the same way): builds `dir`'s corpus-slice index
-    * once and returns (versionPath, split). Split = the last 20% of the
+    * family ([[ensureIndex]]) and the composed ingest index
+    * ([[IngestIncr.ensurePipeIngestIndex]]): builds `dir`'s corpus-slice
+    * index once and returns (versionPath, split). Split = the last 20% of the
     * id range is "the increment": ids above it play the newly-ingested
     * docs, everything below is the already-indexed corpus.
     *
@@ -1688,24 +1683,19 @@ object Similarity {
     * each other's indexes (ADVICE r8).
     *
     * `famPrefix` names the base directory (`graft-<famPrefix>-idx-…`);
-    * `confFamily` namespaces the session confs
-    * (`spark.graft.<confFamily>.indexBase`/`.reapGraceMs`/
-    * `.indexShards`), each falling back to the `spark.graft.minhash.*`
-    * name — the subsystem-wide default under its historical name — then
-    * to the JVM-wide default vars; `parts` are the layout subdirs that
-    * must exist before the marker may bless a version. */
+    * `parts` are the layout subdirs that must exist before the marker
+    * may bless a version; `table`/`idCol` name the corpus whose max id
+    * sets the split and whose mtime versions the index. The session
+    * confs `spark.graft.minhash.indexBase`/`.reapGraceMs`/`.indexShards`
+    * (the subsystem-wide settings, under their historical name) apply
+    * to every family, falling back to the JVM-wide defaults. */
   private[graft] def ensureVersionedIndex(
-      s: SparkSession, dir: String, famPrefix: String, confFamily: String,
+      s: SparkSession, dir: String, famPrefix: String,
       parts: Seq[String], build: (String, Long, Int) => Unit,
-      srcFile: String = "documents.parquet",
-      maxIdOf: (SparkSession, String) => Long = documentsMaxId): (String, Long) =
+      table: String, idCol: String): (String, Long) =
     {
       import org.apache.hadoop.fs.Path
-      def conf(key: String, dflt: String): String =
-        s.conf.getOption(s"spark.graft.$confFamily.$key")
-          .orElse(s.conf.getOption(s"spark.graft.minhash.$key"))
-          .getOrElse(dflt)
-      val maxId = maxIdOf(s, dir)
+      val maxId = tableMaxId(s, dir, table, idCol)
       val split = maxId - maxId / 5
       val hconf = s.sparkContext.hadoopConfiguration
       // Source-version token, the second component of the version name
@@ -1725,9 +1715,9 @@ object Similarity {
       // which the reap pass's current-or-newer ordering relies on.
       val srcMtime: Long =
         if (dir.startsWith("jdbc:"))
-          T(s, dir).byName(srcFile.stripSuffix(".parquet")).count()
+          T(s, dir).byName(table).count()
         else {
-          val src = new Path(s"$dir/$srcFile")
+          val src = new Path(s"$dir/$table.parquet")
           val srcFs = src.getFileSystem(hconf)
           val srcSt = srcFs.getFileStatus(src) // loud FileNotFound on a bad dir
           if (srcSt.isDirectory)
@@ -1737,12 +1727,13 @@ object Similarity {
         }
       val dirHash = // collision-proof component alongside the sanitized name
         f"${scala.util.hashing.MurmurHash3.stringHash(dir) & 0xffffffffL}%08x"
-      // session conf wins over the JVM-wide default vars: "where do the
+      // session conf wins over the JVM-wide defaults: "where do the
       // 100 TB indexes live" is deployment config, and two sessions in
       // one JVM may legitimately differ
-      val idxBase = conf("indexBase", minhashIndexBase)
-      val confGraceMs = conf("reapGraceMs", minhashReapGraceMs.toString).toLong
-      val shards = confShards(s, confFamily)
+      val idxBase = s.conf.get("spark.graft.minhash.indexBase", minhashIndexBase)
+      val confGraceMs = s.conf.get("spark.graft.minhash.reapGraceMs",
+        minhashReapGraceMs.toString).toLong
+      val shards = confShards(s)
       val base = new Path(idxBase,
         s"graft-$famPrefix-idx-" + dir.replaceAll("[^A-Za-z0-9.]", "_") + "-" + dirHash)
       val fs = base.getFileSystem(hconf)
@@ -1782,7 +1773,7 @@ object Similarity {
           // the marker is the read gate — never bless a layout the probe
           // cannot serve (belt over the nesting unwind in tryPublish)
           require(parts.forall(p => fs.exists(new Path(ver, p))),
-            s"$confFamily index publish incomplete at $ver: " +
+            s"$famPrefix index publish incomplete at $ver: " +
               s"${parts.mkString("/")} missing")
           fs.create(marker, true).close()
         }
@@ -1814,7 +1805,7 @@ object Similarity {
                 fs.rename(nested, fresh) && { staging = fresh; true }
               }
               require(unwound,
-                s"$confFamily index publish: build nested under $ver by a " +
+                s"$famPrefix index publish: build nested under $ver by a " +
                   "racing publisher and could not be unwound to staging — " +
                   "lost to a nesting race")
               false
@@ -1877,7 +1868,7 @@ object Similarity {
             if (quiet) {
               reclaims += 1
               require(reclaims <= 3,
-                s"$confFamily index publish failed after ${reclaims - 1} reclaim " +
+                s"$famPrefix index publish failed after ${reclaims - 1} reclaim " +
                   s"attempts: rename into $ver keeps failing or the dir " +
                   "keeps reappearing marker-less (staging " +
                   s"${if (fs.exists(staging)) "intact" else "lost to a nesting race"})")
@@ -1885,7 +1876,7 @@ object Similarity {
               Thread.sleep(500L) // let a transient rename failure clear
             } else {
               require(now < deadline,
-                s"$confFamily index publish timed out after ${graceMs + 30000L} ms " +
+                s"$famPrefix index publish timed out after ${graceMs + 30000L} ms " +
                   s"waiting on marker-less $ver (a publisher may be live, or " +
                   "the store reports future mtimes) — retry, raise " +
                   "spark.graft.minhash.reapGraceMs, or remove the dir manually")
@@ -1950,51 +1941,45 @@ object Similarity {
       (ver.toString, split)
     }
 
-  /** MinHash instantiation of [[ensureVersionedIndex]]: builds/adopts
-    * the (bands, toks) layout for `dir`'s corpus slice and returns
+  /** [[ensureVersionedIndex]] over a family: builds/adopts the (bands,
+    * `featSubdir`) layout for `dir`'s corpus slice and returns
     * (versionPath, split). */
-  def ensureMinhashIndex(s: SparkSession, dir: String): (String, Long) =
-    // famPrefix "mh2" + the KERNEL FINGERPRINT (r19): the version
-    // identity (split, src mtime, shards) does NOT cover the banding
-    // kernel — r15 replaced the seeded-fmix kernel with the md5-window
-    // family, and a pre-switch index under the old base would otherwise
-    // version-match a post-switch probe and serve bands the probe's
-    // banding can never hit (silent empty dedup). That bump used to be
-    // a hand discipline; [[minhashKernelFp]] now folds the defining
-    // constants into the prefix, so a knob change moves the base
-    // automatically and the old base simply ages out (tmpdir locally;
-    // one dead tree on a shared store, reclaimed by pointing a cleanup
-    // at the old prefix).
-    ensureVersionedIndex(s, dir, s"mh2-$minhashKernelFp", "minhash",
-      Seq("bands", "toks"),
+  def ensureIndex(s: SparkSession, fam: IncrFamily, dir: String): (String, Long) =
+    ensureVersionedIndex(s, dir, fam.prefix, Seq("bands", fam.featSubdir),
       (staging, split, shards) =>
-        writeMinhashIndex(s, dir, staging, split, shards))
+        writeIndex(s, fam, dir, staging, split, shards),
+      fam.table, fam.splitIdCol)
+
+  /** A family's `_incr` catalog query: ensure the index, then probe the
+    * increment against it. */
+  private[graft] def incrQuery(fam: IncrFamily,
+      oracle: Option[String]): QueryDef =
+    QueryDef(fam.query,
+      (s, dir) => {
+        val (idx, split) = ensureIndex(s, fam, dir)
+        // no shards argument: the probe reads the layout's shard count
+        // from the returned version path's -sN suffix, so the pairing is
+        // structural (immune to a conf change between ensure and probe)
+        probeIndex(s, fam, dir, idx, split)
+      },
+      oracle)
 
   /** dd_minhash_incr: INCREMENTAL near-dup dedup — the missing 100 TB
     * ingest pattern. Every other dedup query re-scans the whole corpus;
     * a production ingest pipeline dedups each new increment against a
-    * PERSISTED index of what it already holds ([[writeMinhashIndex]] /
-    * [[probeMinhashIndex]]). Here the index covers doc_id < split (built
-    * once, reused across runs) and the query dedups the remaining ids
-    * against it; output = [[ddMinhash]] over the full corpus restricted
-    * to the increment (exact equality, spec-asserted); probe-time reads
-    * are the increment slice (doc_id filter pushed to parquet) plus the
-    * pruned index partitions — never the corpus proper. ORACLE-EXACT
-    * (r15, the mm_phash_incr treatment): the md5-window banding is
+    * PERSISTED index of what it already holds. Here the index covers
+    * doc_id < split (built once, reused across runs) and the query
+    * dedups the remaining ids against it; output = [[ddMinhash]] over
+    * the full corpus restricted to the increment (exact equality,
+    * spec-asserted); probe-time reads are the increment slice (doc_id
+    * filter pushed to parquet) plus the pruned index partitions — never
+    * the corpus proper. ORACLE-EXACT: the md5-window banding is
     * SQL-expressible and the split is `max id − max id / 5`, so DuckDB
     * recomputes the FULL election from the same text and restricts it
     * to the increment — the incremental machinery is checked against an
     * independent engine, on top of the probe≡batch equality spec and
     * the PartitionFilters plan lock. */
-  val ddMinhashIncr = QueryDef(
-    "dd_minhash_incr",
-    (s, dir) => {
-      val (idx, split) = ensureMinhashIndex(s, dir)
-      // no shards argument: the probe reads the layout's shard count
-      // from the returned version path's -sN suffix, so the pairing is
-      // structural (immune to a conf change between ensure and probe)
-      probeMinhashIndex(s, dir, idx, split)
-    },
+  val ddMinhashIncr = incrQuery(minhashFamily,
     oracle = Some(s"""
       WITH sp AS (
         SELECT MAX(doc_id) - MAX(doc_id) // 5 AS split FROM documents),
@@ -2003,9 +1988,14 @@ object Similarity {
       WHERE doc_id >= (SELECT split FROM sp)
       ORDER BY doc_id"""))
 
-  /** SimHash family shape for [[writeIncrIndex]]/[[probeIncrIndex]]. */
-  private val shFamily = IncrFamily(
-    what = "probeSimhashIndex",
+  /** SimHash family: the keeper side table holds (doc_id, simhash) for
+    * exactly the bucket keepers — the hamming verify needs no other
+    * corpus fingerprints. */
+  private[graft] lazy val simhashFamily = IncrFamily(
+    name = "simhash", query = "dd_simhash_incr", what = "probeSimhashIndex",
+    table = "documents", splitIdCol = "doc_id",
+    corpus = (s, dir) => T(s, dir).documents, featOf = simhashFeatOf,
+    prefix = s"sh2-$simhashKernelFp",
     idCol = "doc_id", featSubdir = "sims", featShardCol = "sshard",
     sideDdl = "doc_id BIGINT, simhash BIGINT, sshard BIGINT",
     bandedOf = simhashBandedOf,
@@ -2014,75 +2004,19 @@ object Similarity {
       col("simhash").as("k_sim")),
     verify = (cand, feat, kSide) =>
       hammingVerify(cand,
-        feat.select(col("doc_id"), col("simhash").as("d_sim")), kSide))
-
-  /** Ingest-time half of INCREMENTAL SimHash dedup — the second
-    * instantiation of the versioned-index pattern ([[writeMinhashIndex]]
-    * is the first): persists the corpus's (band, bucket, keeper) frame
-    * partitioned by (band, bshard), plus a (doc_id, simhash) side table
-    * for exactly the docs that are bucket keepers (only they can be
-    * elected by a probe — the hamming verify needs no other corpus
-    * fingerprints), partitioned by sshard. The corpus is scanned ONCE
-    * here, at ingest. */
-  def writeSimhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): Unit =
-    writeIncrIndex(s, indexPath, shards, shFamily,
-      RunCaches.cachedFeature(s, s"dd_simhash_incr:$dir:corpus$split", RunCaches.srcVersion(s, dir, "documents.parquet")) {
-        simhashFeatOf(T(s, dir).documents.filter(col("doc_id") < lit(split)))
-      })
-
-  /** Query-time half: dedups the increment (doc_id >= split) against
-    * the persisted simhash index WITHOUT re-scanning the corpus — the
-    * same probe discipline as [[probeMinhashIndex]]: the bands read is
-    * pruned to the (band, bshard) partitions the increment's own
-    * banding touches (bounded collect, ≤ 8 × shards values); per-bucket
-    * keepers merge as `least(index keeper, increment min)`, which with
-    * append-only ids IS the bucket minimum over corpus ∪ increment, so
-    * the output equals the full [[ddSimhash]] recompute restricted to
-    * the increment (equality spec-asserted bit for bit); verify
-    * fingerprints come from the increment frame plus the index's keeper
-    * side table, the latter pruned to the sshard partitions the elected
-    * corpus keepers occupy. */
-  def probeSimhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): DataFrame =
-    {
-    val srcVer = RunCaches.srcVersion(s, dir, "documents.parquet")
-    probeIncrIndex(s, indexPath, split, shards, shFamily,
-      RunCaches.cachedFeature(s, s"dd_simhash_incr:$dir:incr$split", srcVer) {
-        simhashFeatOf(T(s, dir).documents.filter(col("doc_id") >= lit(split)))
-      }, srcVer)
-  }
-
-  /** SimHash instantiation of [[ensureVersionedIndex]]: builds/adopts
-    * the (bands, sims) layout for `dir`'s corpus slice and returns
-    * (versionPath, split). */
-  def ensureSimhashIndex(s: SparkSession, dir: String): (String, Long) =
-    // "sh2", not "sh": the r15 md5 token hash changed the fingerprint
-    // kernel, and the version identity does not cover it — same
-    // prefix-bump rule as ensureMinhashIndex's mh2 — now automated: the
-    // kernel fingerprint is folded into the prefix (r19)
-    ensureVersionedIndex(s, dir, s"sh2-$simhashKernelFp", "simhash",
-      Seq("bands", "sims"),
-      (staging, split, shards) =>
-        writeSimhashIndex(s, dir, staging, split, shards))
+        feat.select(col("doc_id"), col("simhash").as("d_sim")), kSide),
+    counted = identity)
 
   /** dd_simhash_incr: incremental SimHash dedup — [[ddMinhashIncr]]'s
-    * ingest pattern applied to the simhash family, proving the
-    * versioned-publish/probe machinery is generic across index tiers.
-    * Output = [[ddSimhash]] over the full corpus restricted to the
-    * increment (exact equality, spec-asserted); probe-time reads are
-    * the increment slice plus pruned index partitions — never the
-    * corpus proper. ORACLE-EXACT (r15): the md5 token hash made the
-    * fingerprint SQL-derivable, so DuckDB recomputes the full election
-    * restricted to the increment (`max id − max id // 5`), on top of
-    * the probe≡batch equality spec + the PartitionFilters plan lock. */
-  val ddSimhashIncr = QueryDef(
-    "dd_simhash_incr",
-    (s, dir) => {
-      val (idx, split) = ensureSimhashIndex(s, dir)
-      // no shards argument: the path's -sN suffix is authoritative
-      probeSimhashIndex(s, dir, idx, split)
-    },
+    * ingest pattern applied to the simhash family. Output =
+    * [[ddSimhash]] over the full corpus restricted to the increment
+    * (exact equality, spec-asserted); probe-time reads are the
+    * increment slice plus pruned index partitions — never the corpus
+    * proper. ORACLE-EXACT: the md5 token hash makes the fingerprint
+    * SQL-derivable, so DuckDB recomputes the full election restricted
+    * to the increment (`max id − max id // 5`), on top of the
+    * probe≡batch equality spec + the PartitionFilters plan lock. */
+  val ddSimhashIncr = incrQuery(simhashFamily,
     oracle = Some(s"""
       WITH sp AS (
         SELECT MAX(doc_id) - MAX(doc_id) // 5 AS split FROM documents),
@@ -2091,9 +2025,15 @@ object Similarity {
       WHERE doc_id >= (SELECT split FROM sp)
       ORDER BY doc_id"""))
 
-  /** Embedding family shape for [[writeIncrIndex]]/[[probeIncrIndex]]. */
-  private val embFamily = IncrFamily(
-    what = "probeEmbeddingIndex",
+  /** Embedding family, over the EMBEDDINGS table (versioned by its max
+    * vec_id and mtime): the keeper side table holds (vec_id, v, norm)
+    * for exactly the bucket keepers — the cosine verify needs no other
+    * corpus vectors. */
+  private[graft] lazy val embeddingFamily = IncrFamily(
+    name = "embedding", query = "dd_embedding_incr", what = "probeEmbeddingIndex",
+    table = "embeddings", splitIdCol = "vec_id",
+    corpus = (s, dir) => T(s, dir).embeddings, featOf = embFeatOf,
+    prefix = s"emb-$embKernelFp",
     idCol = "vec_id", featSubdir = "vecs", featShardCol = "vshard",
     sideDdl = "vec_id BIGINT, v ARRAY<FLOAT>, norm DOUBLE, vshard BIGINT",
     bandedOf = embBandedOf,
@@ -2102,69 +2042,15 @@ object Similarity {
       col("norm").as("kn")),
     verify = (cand, feat, kSide) =>
       cosineVerify(cand,
-        feat.select(col("vec_id"), col("v"), col("norm")), kSide))
-
-  /** Ingest-time half of INCREMENTAL embedding dedup — the fourth
-    * [[ensureVersionedIndex]] instantiation, over the EMBEDDINGS table
-    * (the generic machinery's first non-documents corpus): persists the
-    * corpus vectors' (band, bucket, keeper) frame partitioned by
-    * (band, bshard), plus a (vec_id, v, norm) side table for exactly
-    * the bucket keepers (only they can be elected by a probe — the
-    * cosine verify needs no other corpus vectors), partitioned by
-    * vshard. The corpus is banded ONCE here, at ingest. */
-  def writeEmbeddingIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): Unit =
-    writeIncrIndex(s, indexPath, shards, embFamily,
-      RunCaches.cachedFeature(s, s"dd_embedding_incr:$dir:corpus$split", RunCaches.srcVersion(s, dir, "embeddings.parquet")) {
-        embFeatOf(T(s, dir).embeddings.filter(col("vec_id") < lit(split)))
-      })
-
-  /** Query-time half: dedups the increment's vectors (vec_id >= split)
-    * against the persisted index WITHOUT re-banding the corpus — the
-    * same probe discipline as the other three families: pruned bands
-    * read (bounded collect), least-merge of per-bucket keepers (with
-    * append-only ids that IS the bucket minimum over corpus ∪
-    * increment), pruned keeper-vector read, exact-cosine verify through
-    * the shared tail. Output equals the full [[ddEmbedding]] recompute
-    * restricted to the increment (bit-equal, spec-asserted). */
-  def probeEmbeddingIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): DataFrame =
-    {
-    val srcVer = RunCaches.srcVersion(s, dir, "embeddings.parquet")
-    probeIncrIndex(s, indexPath, split, shards, embFamily,
-      RunCaches.cachedFeature(s, s"dd_embedding_incr:$dir:incr$split", srcVer) {
-        embFeatOf(T(s, dir).embeddings.filter(col("vec_id") >= lit(split)))
-      }, srcVer)
-  }
-
-  /** Embedding instantiation of [[ensureVersionedIndex]] — versioned by
-    * the EMBEDDINGS table's max id and mtime. */
-  def ensureEmbeddingIndex(s: SparkSession, dir: String): (String, Long) =
-    ensureVersionedIndex(s, dir, s"emb-$embKernelFp", "embedding",
-      Seq("bands", "vecs"),
-      (staging, split, shards) =>
-        writeEmbeddingIndex(s, dir, staging, split, shards),
-      srcFile = "embeddings.parquet",
-      maxIdOf = (ss, d) => {
-        val r = T(ss, d).embeddings.agg(max(col("vec_id"))).head()
-        require(!r.isNullAt(0),
-          s"embedding index: embeddings corpus at $d is empty — nothing to index")
-        r.getLong(0)
-      })
+        feat.select(col("vec_id"), col("v"), col("norm")), kSide),
+    counted = identity)
 
   /** dd_embedding_incr: incremental embedding dedup — the fourth index
     * family, closing the last modality that still re-scanned its corpus
     * at ingest (text minhash/simhash and images already probe persisted
     * indexes). Rows-only check (float-dependent cosine); pinned by the
     * equality spec + the shared PartitionFilters plan lock. */
-  val ddEmbeddingIncr = QueryDef(
-    "dd_embedding_incr",
-    (s, dir) => {
-      val (idx, split) = ensureEmbeddingIndex(s, dir)
-      // no shards argument: the path's -sN suffix is authoritative
-      probeEmbeddingIndex(s, dir, idx, split)
-    },
-    oracle = None)
+  val ddEmbeddingIncr = incrQuery(embeddingFamily, oracle = None)
 
   val defs: Seq[QueryDef] = Seq(simTopkDot, simTopkCosine, simTopkCosineQ,
     simLshTopk, simIvfTopk, ddMinhash, ddMinhashCc, ddMinhashIncr,

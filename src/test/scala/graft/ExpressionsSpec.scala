@@ -196,6 +196,19 @@ class ExpressionsSpec extends SparkSpec {
       for (rows <- Seq(decs(rdf), withInterpreted(decs(rdf))); (o, g) <- rows)
         assert(o === g, s"le_decode width $n off $off")
     }
+    // off < 1 decodes to null. No old-form comparison here: the old
+    // chain's substring wrapped around on these offsets. The shuffle
+    // keeps the projection off the local relation, whose optimizer fold
+    // would evaluate it interpreted even with codegen on.
+    val rdfShuffled = rdf.repartition(2)
+    for (n <- Seq(1, 2, 4, 8); off <- Seq(0, -3)) {
+      def nulls(d: org.apache.spark.sql.DataFrame) =
+        d.select(expr(s"le_decode(rec, $off, $n)")).collect().map(_.isNullAt(0))
+      for (rows <- Seq(nulls(rdfShuffled), withInterpreted(nulls(rdfShuffled)))) {
+        assert(rows.length === recs.length)
+        assert(rows.forall(identity), s"le_decode width $n off $off must be null")
+      }
+    }
     // null input propagates
     val nulls = Seq((None: Option[Array[Byte]], None: Option[Long])).toDF("rec", "v")
     val r = nulls.select(expr("le_decode(rec, 1, 4)"), expr("le_encode(v, 4)")).collect().head

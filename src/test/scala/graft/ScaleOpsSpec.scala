@@ -231,29 +231,41 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("connectedComponents matches union-find on random graphs") {
-    val rng = new scala.util.Random(1234)
-    for (trial <- 1 to 3) {
-      val n = 60
-      val edges = Seq.fill(70)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-      // brute-force union-find ground truth
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
+    // brute-force union-find ground truth: every node of a non-self-loop
+    // edge, labelled with the min node id of its component
+    def want(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      for ((a, b) <- edges if a != b) {
+        val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
-      val want = nodes.map { v =>
-        // component label = min node id in the component
-        val root = find(v.toInt)
-        v -> nodes.filter(u => find(u.toInt) == root).min
-      }.toMap
-      val got = graft.operators.ScaleOps
+      val nodes = parent.keys.toSeq
+      nodes.map(v => v -> nodes.filter(u => find(u) == find(v)).min).toMap
+    }
+    def got(edges: Seq[(Long, Long)]): Map[Long, Long] =
+      graft.operators.ScaleOps
         .connectedComponents(edges.toDF("a", "b"), "a", "b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === want, s"trial $trial")
+    val rng = new scala.util.Random(1234)
+    for (trial <- 1 to 3) {
+      val edges = Seq.fill(70)((rng.nextInt(60).toLong, rng.nextInt(60).toLong))
+        .filter { case (a, b) => a != b }
+      assert(got(edges) === want(edges), s"trial $trial")
     }
+    // a high-degree hub with an attached tail, plus a disjoint pair —
+    // the hub is NOT the component min, so its label comes from the tail
+    val hub = (1L to 200L).map(i => (500L, 500L + i)) ++
+      Seq((500L, 3L), (3L, 7L), (900L, 901L))
+    val hubLabels = got(hub)
+    assert(hubLabels === want(hub))
+    assert(hubLabels(500L) === 3L && hubLabels(700L) === 3L && hubLabels(900L) === 900L)
+    // an empty edge set, and self-loops only (no node survives a != b)
+    assert(got(Seq.empty[(Long, Long)]).isEmpty)
+    assert(got(Seq((5L, 5L))).isEmpty)
   }
 
   test("connectedComponents: pointer jumping converges on a long chain") {
@@ -264,59 +276,6 @@ class ScaleOpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length === 400)
     assert(got.forall(_._2 === 0L), "every chain node must label to the min id 0")
-  }
-
-  test("connectedComponentsStars agrees with connectedComponents on every fixture shape") {
-    // the two realizations must be output-identical — the stars form is
-    // only ever adopted on measurement, never on semantics (r15 verdict
-    // #5); fixtures cover the shapes where they differ mechanically:
-    // random sparse graphs, a diameter-worst-case path, a high-degree
-    // hub (the stars algorithm's claimed win), and empty input
-    import graft.operators.ScaleOps
-    def both(edges: Seq[(Long, Long)]): (Map[Long, Long], Map[Long, Long]) = {
-      val df = edges.toDF("a", "b")
-      val cc = ScaleOps.connectedComponents(df, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val st = ScaleOps.connectedComponentsStars(df, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      (cc, st)
-    }
-    try {
-      val rng = new scala.util.Random(4321)
-      for (trial <- 1 to 2) {
-        val edges = Seq.fill(80)((rng.nextInt(60).toLong, rng.nextInt(60).toLong))
-          .filter { case (a, b) => a != b }
-        val (cc, st) = both(edges)
-        assert(st === cc, s"random trial $trial")
-      }
-      // 200-node path: diameter worst case for both fixpoints
-      val (ccChain, stChain) = both((0L until 199L).map(i => (i, i + 1)))
-      assert(stChain === ccChain)
-      assert(stChain.values.forall(_ == 0L))
-      // high-degree hub with an attached tail, plus a disjoint pair —
-      // and the hub is NOT the component min, so the star must re-root
-      val hub = (1L to 200L).map(i => (500L, 500L + i)) ++
-        Seq((500L, 3L), (3L, 7L), (900L, 901L))
-      val (ccHub, stHub) = both(hub)
-      assert(stHub === ccHub)
-      assert(stHub(500L) === 3L && stHub(700L) === 3L && stHub(900L) === 900L)
-      // empty edge set: both come back empty with the same schema
-      val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-      assert(ScaleOps.connectedComponentsStars(empty, "a", "b").collect().isEmpty)
-      // self-loops only: no node survives the a != b filter
-      assert(ScaleOps.connectedComponentsStars(
-        Seq((5L, 5L)).toDF("a", "b"), "a", "b").collect().isEmpty)
-      // the catalog query routes across the spark.graft.ccAlgo switch
-      // with identical output (and rejects an unknown algo loudly)
-      val g1 = QueryDef.catalogs.find(_.name == "g1_components").get
-      val viaJump = g1.run(spark, sf001).collect().toSeq
-      spark.conf.set("spark.graft.ccAlgo", "stars")
-      try {
-        assert(g1.run(spark, sf001).collect().toSeq === viaJump)
-        spark.conf.set("spark.graft.ccAlgo", "nope")
-        intercept[RuntimeException](g1.run(spark, sf001).collect())
-      } finally spark.conf.unset("spark.graft.ccAlgo")
-    } finally graft.operators.RunCaches.clearAll()
   }
 
   test("connectedComponents frees its per-iteration checkpoints") {

@@ -203,7 +203,7 @@ class SemanticsSpec extends SparkSpec {
     // stored for the corpus) ∪ (the probe's rows) must equal one batch
     // dd_minhash over corpus ∪ increment — bit for bit, not just counts
     val full = Similarity.ddMinhash.run(spark, sf001).collect().toSeq
-    val (_, split) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (_, split) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
     val probe = Similarity.ddMinhashIncr.run(spark, sf001).collect().toSeq
     assert(probe === full.filter(_.getAs[Long]("doc_id") >= split))
     assert(probe.nonEmpty, "vacuous: the increment produced no dup rows")
@@ -452,7 +452,7 @@ class SemanticsSpec extends SparkSpec {
     // rows must equal one batch dd_simhash over corpus ∪ increment,
     // restricted to the increment — bit for bit (hamming + is_dup too)
     val full = Similarity.ddSimhash.run(spark, sf001).collect().toSeq
-    val (_, split) = Similarity.ensureSimhashIndex(spark, sf001)
+    val (_, split) = Similarity.ensureIndex(spark, Similarity.simhashFamily, sf001)
     val probe = Similarity.ddSimhashIncr.run(spark, sf001).collect().toSeq
     assert(probe === full.filter(_.getAs[Long]("doc_id") >= split))
     assert(probe.nonEmpty, "vacuous: the increment produced no candidate rows")
@@ -471,7 +471,8 @@ class SemanticsSpec extends SparkSpec {
     // third instantiation of the incremental contract, image modality;
     // this one is additionally oracle-checked (portable integer hash)
     val full = Multimodal.mmPhashDedup.run(spark, sf001).collect().toSeq
-    val (_, split) = Multimodal.ensurePhashIndex(spark, sf001)
+    val (_, split) = graft.operators.Similarity.ensureIndex(spark,
+      Multimodal.phashFamily, sf001)
     val probe = Multimodal.mmPhashIncr.run(spark, sf001).collect().toSeq
     assert(probe === full.filter(_.getAs[Long]("media_id") >= split))
     assert(probe.nonEmpty, "vacuous: the increment produced no candidate rows")
@@ -491,7 +492,7 @@ class SemanticsSpec extends SparkSpec {
     // fourth instantiation, embeddings modality — the generic ensure's
     // first non-documents corpus (versioned by embeddings max id+mtime)
     val full = Similarity.ddEmbedding.run(spark, sf001).collect().toSeq
-    val (_, split) = Similarity.ensureEmbeddingIndex(spark, sf001)
+    val (_, split) = Similarity.ensureIndex(spark, Similarity.embeddingFamily, sf001)
     val probe = Similarity.ddEmbeddingIncr.run(spark, sf001).collect().toSeq
     assert(probe === full.filter(_.getAs[Long]("vec_id") >= split))
     assert(probe.nonEmpty, "vacuous: the increment produced no candidate rows")
@@ -506,10 +507,10 @@ class SemanticsSpec extends SparkSpec {
     import graft.operators.Similarity
     // same source, same split → the SAME published version directory,
     // untouched (ingest must not re-run on every probe)
-    val (p1, split1) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (p1, split1) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
     val ver = new java.io.File(p1)
     val m1 = ver.lastModified
-    val (p2, split2) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (p2, split2) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
     assert((p2, split2) === ((p1, split1)))
     assert(ver.lastModified === m1, "second ensure must reuse, not rebuild")
     // reaping is age-gated: a stale VERSION (older source tier) and a
@@ -548,7 +549,7 @@ class SemanticsSpec extends SparkSpec {
     // shard-count) list and reap — one assertion failure here must not
     // cascade into misleading failures downstream (r13 test sweep)
     try {
-      val (p3, _) = Similarity.ensureMinhashIndex(spark, sf001)
+      val (p3, _) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
       assert(p3 === p1, "same (split, mtime) must republish under the same version")
       assert(ver.isDirectory, "rebuild must publish the version directory")
       assert(new java.io.File(ver, "_PUBLISHED").isFile,
@@ -602,7 +603,7 @@ class SemanticsSpec extends SparkSpec {
     // holding (possibly incomplete) data with no marker. Hadoop rename
     // into an existing dir NESTS the source (it does not fail), so an
     // unguarded publish would bless the husk with a stray .build-* inside
-    val (p1, split1) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (p1, split1) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
     val ver = new java.io.File(p1)
     assert(new java.io.File(ver, "_PUBLISHED").delete())
     deleteAll(new java.io.File(ver, "toks")) // structurally incomplete husk
@@ -612,7 +613,7 @@ class SemanticsSpec extends SparkSpec {
     // mid-flight) — shrink the window so the test pays ~2 s, not 15 min
     spark.conf.set("spark.graft.minhash.reapGraceMs", "1500")
     val (p2, split2) =
-      try Similarity.ensureMinhashIndex(spark, sf001)
+      try Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
       finally spark.conf.unset("spark.graft.minhash.reapGraceMs")
     assert((p2, split2) === ((p1, split1)))
     assert(new java.io.File(ver, "_PUBLISHED").isFile)
@@ -622,7 +623,7 @@ class SemanticsSpec extends SparkSpec {
       "husk remnants must not survive into the republished version")
     assert(!ver.listFiles.exists(_.getName.startsWith(".build-")),
       "no staging dir may end up nested under the published version")
-    val probed = Similarity.probeMinhashIndex(spark, sf001, p2, split2)
+    val probed = Similarity.probeIndex(spark, Similarity.minhashFamily, sf001, p2, split2)
     assert(probed.collect().nonEmpty, "republished index must serve the probe")
   }
 
@@ -632,7 +633,7 @@ class SemanticsSpec extends SparkSpec {
     // client-side copy, so ver exists marker-less with FRESH files. The
     // local publish must wait and adopt once the marker lands — deleting
     // the dir mid-copy would interleave two publishers' part-files
-    val (p1, split1) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (p1, split1) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
     val ver = new java.io.File(p1)
     assert(new java.io.File(ver, "_PUBLISHED").delete())
     val sentinel = new java.io.File(ver, "racer-part-file.parquet")
@@ -643,7 +644,7 @@ class SemanticsSpec extends SparkSpec {
     })
     racer.start()
     try {
-      val (p2, split2) = Similarity.ensureMinhashIndex(spark, sf001)
+      val (p2, split2) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
       assert((p2, split2) === ((p1, split1)))
       assert(sentinel.exists,
         "a live publisher's files must never be deleted mid-copy — adopt, don't reclaim")
@@ -667,7 +668,7 @@ class SemanticsSpec extends SparkSpec {
     // under one setting can never serve pruning under another.
     val defaultProbe = Similarity.ddMinhashIncr.run(spark, sf001)
       .collect().toSeq.sortBy(_.getAs[Long]("doc_id"))
-    val (pDef, _) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (pDef, _) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
     spark.conf.set("spark.graft.minhash.indexShards", "8")
     // grace 1 ms makes EVERYTHING reapable — proving the sibling
     // current-tier layout below survives by name, not by youth
@@ -682,7 +683,7 @@ class SemanticsSpec extends SparkSpec {
     // of this suite published, so the ensure below actually rebuilds
     deleteAll(new java.io.File(pDef.stripSuffix("s32") + "s8"))
     try {
-      val (p8, split8) = Similarity.ensureMinhashIndex(spark, sf001)
+      val (p8, split8) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
       assert(p8.endsWith("-s8"), s"shard count must version the index, got $p8")
       assert(new java.io.File(pDef).isDirectory,
         "a PUBLISHED sibling shard layout of the CURRENT tier may be live in another session — reap must spare it")
@@ -690,7 +691,7 @@ class SemanticsSpec extends SparkSpec {
         "a marker-less quiet sibling is a crashed publish — reap must reclaim it")
       // no shards argument on purpose: the path's -sN suffix is
       // authoritative, so a default/wrong argument cannot mis-prune
-      val probed = Similarity.probeMinhashIndex(spark, sf001, p8, split8)
+      val probed = Similarity.probeIndex(spark, Similarity.minhashFamily, sf001, p8, split8)
         .collect().toSeq.sortBy(_.getAs[Long]("doc_id"))
       assert(probed === defaultProbe,
         "an 8-shard index must yield the identical probe result")
@@ -708,9 +709,9 @@ class SemanticsSpec extends SparkSpec {
     import graft.operators.Similarity
     // the path's -sN suffix is authoritative; an explicit DISAGREEING
     // argument is a caller error that must not silently mis-prune
-    val (p, split) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (p, split) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
     val e = intercept[IllegalArgumentException] {
-      Similarity.probeMinhashIndex(spark, sf001, p, split, shards = 7)
+      Similarity.probeIndex(spark, Similarity.minhashFamily, sf001, p, split, shards = 7)
     }
     assert(e.getMessage.contains("disagrees"), e.getMessage)
   }
@@ -721,10 +722,10 @@ class SemanticsSpec extends SparkSpec {
     graft.GraftExtensions.ensureRegistered(s2)
     val base2 = tempDir("graft-mh-conf").toString
     s2.conf.set("spark.graft.minhash.indexBase", base2)
-    val (p2, _) = Similarity.ensureMinhashIndex(s2, sf001)
+    val (p2, _) = Similarity.ensureIndex(s2, Similarity.minhashFamily, sf001)
     assert(p2.startsWith(base2),
       s"conf-set session must publish under its own base, got $p2")
-    val (p1, _) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (p1, _) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
     assert(!p1.startsWith(base2),
       "a session without the conf must keep the JVM default base")
   }
@@ -741,11 +742,11 @@ class SemanticsSpec extends SparkSpec {
     spark.conf.set("spark.graft.minhash.indexBase",
       "file:" + tempDir("graft-mh-fs").toString)
     try {
-      val (p1, split1) = Similarity.ensureMinhashIndex(spark, sf001)
+      val (p1, split1) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
       assert(p1.startsWith("file:"), s"index must publish under the file: base, got $p1")
-      val (p2, split2) = Similarity.ensureMinhashIndex(spark, sf001)
+      val (p2, split2) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
       assert((p2, split2) === ((p1, split1)), "scheme-qualified publish must be idempotent")
-      val probed = Similarity.probeMinhashIndex(spark, sf001, p1, split1).collect().toSeq
+      val probed = Similarity.probeIndex(spark, Similarity.minhashFamily, sf001, p1, split1).collect().toSeq
       assert(probed === localProbe,
         "probe against the file:-scheme index must equal the local-base probe")
     } finally spark.conf.unset("spark.graft.minhash.indexBase")
@@ -758,7 +759,7 @@ class SemanticsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source")
       .write.parquet(s"$dir/documents.parquet")
     val e = intercept[IllegalArgumentException] {
-      Similarity.ensureMinhashIndex(spark, dir)
+      Similarity.ensureIndex(spark, Similarity.minhashFamily, dir)
     }
     assert(e.getMessage.contains("empty"), s"message must name the cause: ${e.getMessage}")
   }
@@ -766,22 +767,23 @@ class SemanticsSpec extends SparkSpec {
   test("simhash index: husk reclaim works through the generic machinery with family parts and confs") {
     import graft.operators.Similarity
     // the husk/racer discipline is shared code, but the parts gate
-    // ("bands","sims" here) and the family conf namespace are per-family
-    // surface — regress either and only a simhash-side spec catches it
-    val (p1, split1) = Similarity.ensureSimhashIndex(spark, sf001)
+    // ("bands","sims" here) is per-family surface, and the shared confs
+    // must reach a non-minhash family — regress either and only a
+    // simhash-side spec catches it
+    val (p1, split1) = Similarity.ensureIndex(spark, Similarity.simhashFamily, sf001)
     val ver = new java.io.File(p1)
     assert(new java.io.File(ver, "_PUBLISHED").delete())
     deleteAll(new java.io.File(ver, "sims")) // structurally incomplete husk
-    // family-specific conf must govern (and fall back cleanly afterwards)
-    spark.conf.set("spark.graft.simhash.reapGraceMs", "1500")
+    // the subsystem conf must govern (and fall back cleanly afterwards)
+    spark.conf.set("spark.graft.minhash.reapGraceMs", "1500")
     val (p2, split2) =
-      try Similarity.ensureSimhashIndex(spark, sf001)
-      finally spark.conf.unset("spark.graft.simhash.reapGraceMs")
+      try Similarity.ensureIndex(spark, Similarity.simhashFamily, sf001)
+      finally spark.conf.unset("spark.graft.minhash.reapGraceMs")
     assert((p2, split2) === ((p1, split1)))
     assert(new java.io.File(ver, "_PUBLISHED").isFile)
     assert(new java.io.File(ver, "sims").isDirectory,
       "the husk must be rebuilt whole — the parts gate must check the FAMILY's subdirs")
-    val probed = Similarity.probeSimhashIndex(spark, sf001, p2, split2)
+    val probed = Similarity.probeIndex(spark, Similarity.simhashFamily, sf001, p2, split2)
     assert(probed.collect().nonEmpty, "republished simhash index must serve the probe")
   }
 
@@ -795,7 +797,7 @@ class SemanticsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source")
       .write.parquet(s"$dir/documents.parquet")
     val e = intercept[IllegalArgumentException] {
-      Similarity.ensureMinhashIndex(spark, dir)
+      Similarity.ensureIndex(spark, Similarity.minhashFamily, dir)
     }
     assert(e.getMessage.contains("corpus slice"), e.getMessage)
   }
@@ -1353,7 +1355,7 @@ class SemanticsSpec extends SparkSpec {
     // editing a banding/gate/threshold constant changes the fp, which
     // moves the whole index base, so a stale-kernel index can never
     // version-match a post-change probe
-    val (pm, _) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (pm, _) = Similarity.ensureIndex(spark, Similarity.minhashFamily, sf001)
     assert(pm.contains(s"mh2-${Similarity.minhashKernelFp}"),
       s"minhash index path $pm must carry the kernel fp")
     val (pp, _) = IngestIncr.ensurePipeIngestIndex(spark, sf001)
@@ -1375,11 +1377,11 @@ class SemanticsSpec extends SparkSpec {
       tempDir("graft-kfp-itest").toString)
     var builds = 0
     def ensure(fp: String): (String, Long) =
-      Similarity.ensureVersionedIndex(s2, sf001, s"kfp-$fp", "minhash",
+      Similarity.ensureVersionedIndex(s2, sf001, s"kfp-$fp",
         Seq("part"), (staging, _, _) => {
           builds += 1
           s2.range(1).toDF("x").write.parquet(s"$staging/part")
-        })
+        }, "documents", "doc_id")
     val fpA = Similarity.kernelFp("knob" -> 1)
     val fpB = Similarity.kernelFp("knob" -> 2)
     val (pa1, _) = ensure(fpA)

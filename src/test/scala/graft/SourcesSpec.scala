@@ -256,7 +256,8 @@ class SourcesSpec extends SparkSpec {
     val url = s"jdbc:derby:$db;create=true"
     try {
       JdbcLoad.load(spark, sf001, url)
-      val (v1, split1) = graft.operators.Similarity.ensureMinhashIndex(spark, url)
+      val (v1, split1) = graft.operators.Similarity.ensureIndex(spark,
+        graft.operators.Similarity.minhashFamily, url)
       val n1 = Tables(spark, url).documents.count()
       assert(v1.contains(s"v$split1-$n1-s"),
         s"version name must carry the (split, count) token: $v1")
@@ -267,7 +268,8 @@ class SourcesSpec extends SparkSpec {
         full.run(spark, url).filter($"doc_id" >= split1)
           .orderBy($"doc_id").collect().toSeq)
       // the embedding family (BLOB-decoded vectors + vec_id token) too
-      val (ev1, esplit1) = graft.operators.Similarity.ensureEmbeddingIndex(spark, url)
+      val (ev1, esplit1) = graft.operators.Similarity.ensureIndex(spark,
+        graft.operators.Similarity.embeddingFamily, url)
       val embIncr = QueryDef.catalogs.find(_.name == "dd_embedding_incr").get
       assert(embIncr.run(spark, url).collect().toSeq ===
         embIncr.run(spark, sf001).collect().toSeq)
@@ -283,7 +285,8 @@ class SourcesSpec extends SparkSpec {
         .withColumn("doc_id", $"doc_id" + 777L)
         .write.mode("append").format("jdbc")
         .option("url", url).option("dbtable", "documents").save()
-      val (v2, split2) = graft.operators.Similarity.ensureMinhashIndex(spark, url)
+      val (v2, split2) = graft.operators.Similarity.ensureIndex(spark,
+        graft.operators.Similarity.minhashFamily, url)
       assert(v2 !== v1,
         s"a grown corpus re-served the stale index version: $v2")
       assert(split2 > split1)
